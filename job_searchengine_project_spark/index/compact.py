@@ -142,9 +142,9 @@ def _compact_partition(batches, *, block_size: int, avgdl: float,
                 }
                 if with_pos:
                     row["pos_blob"] = bytes(getattr(r, "pos_blob", b"") or b"")
-                    row["block_pos_bytes"] = list(
-                        getattr(r, "block_pos_bytes", []) or []
-                    )
+                    # an ndarray has no truth value: test for None only
+                    bpb = getattr(r, "block_pos_bytes", None)
+                    row["block_pos_bytes"] = [] if bpb is None else list(bpb)
             row["term_bucket"] = int(tuples[0].term_bucket)
             rows.append(row)
         yield pd.DataFrame(rows)

@@ -319,26 +319,19 @@ def _load_shard_norms(norms_root: str, shard: int, rng: int, n_docs: int) -> _Sh
 
 
 def _attach_urls_pruned(spark: SparkSession, index_dir: str, top: DataFrame) -> DataFrame:
-    """Attach hit urls with a PUSHED doc_id isin read — never a full
+    """Attach hit urls with a doc_id-keyed forward read — never a full
     forward scan. The input must be a final top-k (tiny: it IS the
     query result, and it is already collect()ed here by contract), so
-    the url fetch is a DRIVER-SIDE pyarrow point read — the same
-    row-group-pruned read the driver engine's _fetch_urls does —
+    the url fetch is the DRIVER-SIDE keyed read ``fetch_urls_map``
     instead of a whole extra Spark job (scan + broadcast join) whose
-    input the driver was holding anyway. pyarrow's isin is a native
-    hash probe, so the many-thousand-literal In() RPC cost that forced
-    the old join form never appears. (r6: one fewer Spark job on every
-    ranked sharded query.)"""
+    input the driver was holding anyway. (r6: one fewer Spark job on
+    every ranked sharded query.)"""
     from pyspark.sql.types import StringType, StructField, StructType
 
     rows = top.collect()
     if not rows:
         return top.withColumn("url", F.lit(None).cast("string"))
-    ids = sorted({int(r["doc_id"]) for r in rows})
-    t = pads.dataset(os.path.join(index_dir, "forward")).to_table(
-        columns=["doc_id", "url"], filter=pads.field("doc_id").isin(ids)
-    )
-    url_of = dict(zip(t["doc_id"].to_pylist(), t["url"].to_pylist()))
+    url_of = fetch_urls_map(index_dir, [int(r["doc_id"]) for r in rows])
     out_rows = [
         (*r, url_of[int(r["doc_id"])]) for r in rows if int(r["doc_id"]) in url_of
     ]
@@ -349,14 +342,17 @@ def _attach_urls_pruned(spark: SparkSession, index_dir: str, top: DataFrame) -> 
 
 
 def fetch_urls_map(index_dir: str, doc_ids: list[int]) -> dict[int, str]:
-    """Driver-side row-group-pruned pyarrow point read of hit urls
-    (the engine's _fetch_urls shape) — shared by every caller that
-    already holds the hit ids on the driver."""
+    """Driver-side doc_id-keyed read of hit urls
+    (``iolayout.ParquetSnapshot`` over ``forward/``, listed per call so
+    a sharded query sees the latest update) — shared by every caller
+    that already holds the hit ids on the driver. ``index_dir`` must
+    be a driver-local path (see ``ParquetSnapshot``)."""
+    from job_searchengine_project_spark.iolayout import ParquetSnapshot
+
     if not doc_ids:
         return {}
-    t = pads.dataset(os.path.join(index_dir, "forward")).to_table(
-        columns=["doc_id", "url"],
-        filter=pads.field("doc_id").isin(sorted(set(int(d) for d in doc_ids))),
+    t = ParquetSnapshot(os.path.join(index_dir, "forward")).read(
+        ["doc_id", "url"], key="doc_id", values={int(d) for d in doc_ids}
     )
     return dict(zip(t["doc_id"].to_pylist(), t["url"].to_pylist()))
 

@@ -54,8 +54,9 @@ def _bm25_scored(spark, sf_dir: str, terms: list[str]) -> DataFrame:
     # +0.0 seed that sort_array(collect_list(...)) produced (query
     # terms are distinct per doc, so term-ascending order is the
     # collect_list sort; docs missing a term contribute no element,
-    # exactly like the missing tf row).
-    sterms = sorted(terms)
+    # exactly like the missing tf row). A repeated query term scores
+    # once, as in the grouped form.
+    sterms = sorted(set(terms))
     docs = read_spread(spark, f"{sf_dir}/documents.parquet").select("doc_id", "text")
     toks = F.filter(F.split(F.col("text"), " "), lambda t: F.length(t) > 1)
     per = docs.select(

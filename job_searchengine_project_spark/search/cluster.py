@@ -624,47 +624,24 @@ def _match_terms_of(index_dir: str, stats: dict, q: dict) -> list[str]:
 def _stored_fields_for(
     spark: SparkSession, index_dir: str, urls: list[str]
 ) -> dict[str, dict]:
-    """Stored _source rows for a page of hit urls: bucket- and
-    row-group-pruned docstore point read (search/stored.py pattern),
-    newest generation per url. Page-sized — never a docstore scan."""
-    from job_searchengine_project_spark.index.build import _term_bucket_py
+    """Stored _source rows for a page of hit urls: the driver-side
+    keyed docstore read (``newest_stored_rows``, the engine's
+    fields_of_many shape), newest generation per url. The page's urls
+    are already on the driver, so a Spark job (scan + collect) would
+    pay a whole scheduling round-trip for a k-row read (r6). Listed
+    per call, so a sharded query sees the latest update;
+    ``index_dir`` must be a driver-local path."""
+    from job_searchengine_project_spark.iolayout import ParquetSnapshot
+    from job_searchengine_project_spark.search.stored import newest_stored_rows
 
-    stats = _stats(index_dir)
-    if stats:
-        if not stats.get("store_fields"):
-            return {}
-        nb = int(stats.get("stored_buckets", 64))
-    else:
-        man = _fielded_manifest(index_dir)
-        if not man or not man.get("store_fields"):
-            return {}
-        nb = int(man.get("stored_buckets", 64))
-    urls = sorted({u for u in urls if u})
-    if not urls:
+    stats = _stats(index_dir) or _fielded_manifest(index_dir)
+    if not stats or not stats.get("store_fields"):
         return {}
-    # driver-side pyarrow point read per touched bucket (the engine's
-    # fields_of_many shape): the page's urls are already on the
-    # driver, so a Spark job (scan + collect) paid a whole scheduling
-    # round-trip for a k-row read (r6).
-    import pyarrow.dataset as pads
-
-    by_bucket: dict[int, list[str]] = {}
-    for u in urls:
-        by_bucket.setdefault(_term_bucket_py(u, nb), []).append(u)
-    best: dict[str, tuple[int, dict]] = {}
-    for bkt, us in by_bucket.items():
-        bucket_dir = os.path.join(index_dir, "stored", f"sbucket={bkt}")
-        if not os.path.isdir(bucket_dir):
-            continue
-        tbl = pads.dataset(bucket_dir).to_table(
-            filter=pads.field("url").isin(us)
-        )
-        for d in tbl.to_pylist():
-            g = int(d.pop("_gen", 0) or 0)
-            u = d["url"]
-            if u not in best or g >= best[u][0]:
-                best[u] = (g, d)
-    return {u: d for u, (_g, d) in best.items()}
+    return newest_stored_rows(
+        ParquetSnapshot(os.path.join(index_dir, "stored"), "sbucket"),
+        urls,
+        int(stats.get("stored_buckets", 64)),
+    )
 
 
 def _apply_highlight(

@@ -1,13 +1,15 @@
 """Query engine: term lookup -> segment load -> block-max WAND top-k.
 
-Read path is pyarrow parquet with predicate pushdown: the segments
-table is partitioned by ``term_bucket`` (directory pruning) and sorted
-by ``term`` within files (row-group statistics pruning), so a query
-touches only the row groups holding its terms — the Spark-side
-equivalent of a term-dictionary seek. Doclens load once per index and
-memoize (the docstore is the norms file; at 10^12-doc scale this
-becomes per-doc-range shards co-resident with segment shards — see
-README scale notes).
+Read path is keyed parquet point reads (``iolayout.ParquetSnapshot``):
+the segments table is partitioned by ``term_bucket`` (directory
+pruning) and sorted by ``term`` within files (row-group min/max
+pruning), so a query touches only the row groups holding its terms —
+the Spark-side equivalent of a term-dictionary seek. Hit urls and
+stored fields are the same keyed reads over the forward table and the
+url-bucketed docstore. Doclens load once per index and memoize (the
+docstore is the norms file; at 10^12-doc scale this becomes
+per-doc-range shards co-resident with segment shards — see README
+scale notes).
 
 Scoring is float64, identical math and identical per-doc summation
 order (sorted by term) to the DataFrame oracle, so parity is exact to
@@ -26,6 +28,8 @@ import pyarrow.dataset as pads
 from job_searchengine_project_spark import BM25_B, BM25_K1
 from job_searchengine_project_spark.index import codec
 from job_searchengine_project_spark.index.build import _term_bucket_py
+from job_searchengine_project_spark.iolayout import ParquetSnapshot
+from job_searchengine_project_spark.search.stored import newest_stored_rows
 from job_searchengine_project_spark.search.wand import TermCursor, wand_topk
 
 
@@ -154,14 +158,26 @@ def exhaustive_topk_arrays(
     ``dl_of(docs)`` resolves doclens (dense driver array or
     shard-local offset array).
 
-    Accumulation is ``accumulate_arrays`` (sorted-term float order);
-    ``argpartition`` ties at the k-boundary are widened to the full
-    tie set so the (-score, doc_id) sort applies the documented
-    asc-doc_id tie-break exactly.
+    Accumulation is ``accumulate_arrays`` (sorted-term float order),
+    selection ``topk_pairs``.
     """
     uniq, sums = accumulate_arrays(
         term_arrays, idf_of, dl_of, avgdl, k1, b, deleted
     )
+    return topk_pairs(uniq, sums, k, after)
+
+
+def topk_pairs(
+    uniq: np.ndarray,
+    sums: np.ndarray,
+    k: int,
+    after: tuple[float, int] | None = None,
+) -> list[tuple[int, float]]:
+    """The top ``k`` (doc_id, score) of accumulated scores, ordered
+    (-score, doc_id); ``k <= 0`` selects nothing (a count-only call).
+    ``argpartition`` ties at the k-boundary are widened to the full
+    tie set so the sort applies the documented asc-doc_id tie-break
+    exactly."""
     if after is not None:
         # search_after cursor (ES deep-pagination): keep only docs
         # STRICTLY after (score desc, doc_id asc) the cursor — one
@@ -173,7 +189,7 @@ def exhaustive_topk_arrays(
         s_a, d_a = float(after[0]), int(after[1])
         keep = (sums < s_a) | ((sums == s_a) & (uniq > d_a))
         uniq, sums = uniq[keep], sums[keep]
-    if uniq.size == 0:
+    if uniq.size == 0 or k <= 0:
         return []
     if k >= uniq.size:
         idx = np.arange(uniq.size)
@@ -211,7 +227,16 @@ class SearchHit:
 
 
 class SearchEngine:
-    """Driver-side query engine over a built index directory."""
+    """Driver-side query engine over a built index directory.
+
+    Snapshot contract: the segment, forward and stored file sets are
+    listed once, at their first read, and kept for the engine's life
+    (``iolayout.ParquetSnapshot`` — footers cached, no dataset
+    discovery per query). Tombstones stay live: they are re-read
+    whenever the ``deleted/`` listing changes, so a ``delete_docs``
+    shows in the next answer of an open engine. After ``update_index``
+    or ``compact_index`` open a new engine: an open one does not see
+    appended files, and a compaction deletes files it would read."""
 
     def __init__(self, index_dir: str):
         self.index_dir = index_dir
@@ -226,8 +251,8 @@ class SearchEngine:
         self.avgdl = float(self.stats["avgdl"])
         self.term_buckets = int(self.stats["term_buckets"])
         self._doclens: np.ndarray | None = None
-        self._urls: dict[int, str] | None = None
-        self._segments_ds: pads.Dataset | None = None
+        self._urls: dict[int, str] = {}
+        self._snapshots: dict[str, ParquetSnapshot] = {}
 
     @property
     def tombstones(self) -> np.ndarray:
@@ -239,8 +264,16 @@ class SearchEngine:
 
     # --- storage access ---------------------------------------------------
 
-    def _forward_ds(self):
-        return pads.dataset(os.path.join(self.index_dir, "forward"))
+    _PARTITION = {"segments": "term_bucket", "stored": "sbucket"}
+
+    def _snapshot(self, sub: str) -> ParquetSnapshot:
+        """The engine's one keyed reader of ``index_dir/<sub>``
+        (forward, stored or segments), listed at first use."""
+        if sub not in self._snapshots:
+            self._snapshots[sub] = ParquetSnapshot(
+                os.path.join(self.index_dir, sub), self._PARTITION.get(sub)
+            )
+        return self._snapshots[sub]
 
     @property
     def doclens(self) -> np.ndarray:
@@ -249,7 +282,7 @@ class SearchEngine:
         # driver engine's working set (8 B/doc; the distributed paths
         # hold it shard-local instead)
         if self._doclens is None:
-            t = self._forward_ds().to_table(columns=["doc_id", "doclen"])
+            t = self._snapshot("forward").read(["doc_id", "doclen"])
             arr = np.zeros(self.n_docs, dtype=np.float64)
             arr[t["doc_id"].to_numpy()] = t["doclen"].to_numpy()
             self._doclens = arr
@@ -259,7 +292,7 @@ class SearchEngine:
         """Every live doc id: one single-column forward read minus
         tombstones (the match_all hit set; at cluster scale this is
         the forward table itself — never fetched to one node)."""
-        t = self._forward_ds().to_table(columns=["doc_id"])
+        t = self._snapshot("forward").read(["doc_id"])
         docs = set(t.column("doc_id").to_pylist())
         dele = self.tombstones
         if dele.size and docs:
@@ -267,176 +300,89 @@ class SearchEngine:
         return docs
 
     def fields_of(self, doc_id: int) -> dict | None:
-        """Stored fields for one hit (ES hit _source, README.md:19-38).
-
-        Reads ONLY the hit url's hash bucket (partition pruning) and
-        filters by url inside it (the bucket is url-sorted, so parquet
-        row-group stats prune the scan) — never the whole docstore."""
-        if not self.stats.get("store_fields"):
-            return None
-        url = self.url_of(doc_id)
-        b = _term_bucket_py(url, int(self.stats.get("stored_buckets", 64)))
-        bucket_dir = os.path.join(self.index_dir, "stored", f"sbucket={b}")
-        if not os.path.isdir(bucket_dir):  # empty bucket was never written
-            return None
-        tbl = pads.dataset(bucket_dir).to_table(filter=pads.field("url") == url)
-        if tbl.num_rows == 0:
-            return None
-        rows = tbl.to_pylist()
-        # a replaced url has one stored row per version; the newest
-        # (max generation base) wins — ES `_id` overwrite semantics
-        row = max(rows, key=lambda r: r.get("_gen") or 0)
-        row.pop("_gen", None)
-        return row
+        """Stored fields for one hit (ES hit _source, README.md:19-38):
+        ``fields_of_many`` of one id."""
+        return self.fields_of_many([doc_id])[doc_id]
 
     def fields_of_many(self, doc_ids: list[int]) -> dict[int, dict | None]:
-        """Batched ``fields_of``: the hit list's stored fields in ONE
-        pruned read per touched url-hash bucket (the ``mget`` shard-
-        grouped shape) instead of one dataset open + point read per
-        hit — a full-hit-set response (size=10^7 bodies) was paying
-        ~2ms of dataset discovery per hit, which dominated the whole
-        query at 10^4 hits."""
+        """Stored fields of a hit list: the hit urls' docstore buckets
+        only (partition pruning), then the url row groups inside them
+        (``newest_stored_rows``). At this index's sizes each bucket
+        file is one row group, so a touched file is read whole; the
+        saving is one cached-footer read per touched file instead of a
+        dataset open per hit."""
         if not self.stats.get("store_fields"):
             return dict.fromkeys(doc_ids)
         self._fetch_urls(list(doc_ids))
-        nb = int(self.stats.get("stored_buckets", 64))
-        by_bucket: dict[int, list[str]] = {}
-        url_of: dict[int, str] = {}
-        for d in doc_ids:
-            u = self._urls[d]
-            url_of[d] = u
-            by_bucket.setdefault(_term_bucket_py(u, nb), []).append(u)
-        rows_by_url: dict[str, list[dict]] = {}
-        for b, us in by_bucket.items():
-            bucket_dir = os.path.join(self.index_dir, "stored", f"sbucket={b}")
-            if not os.path.isdir(bucket_dir):
-                continue
-            tbl = pads.dataset(bucket_dir).to_table(
-                filter=pads.field("url").isin(sorted(set(us)))
-            )
-            for row in tbl.to_pylist():
-                rows_by_url.setdefault(row["url"], []).append(row)
+        rows = newest_stored_rows(
+            self._snapshot("stored"),
+            [self._urls[d] for d in doc_ids],
+            int(self.stats.get("stored_buckets", 64)),
+        )
         out: dict[int, dict | None] = {}
         for d in doc_ids:
-            rows = rows_by_url.get(url_of[d])
-            if not rows:
-                out[d] = None
-                continue
-            # newest generation wins — identical pick to fields_of
-            row = dict(max(rows, key=lambda r: r.get("_gen") or 0))
-            row.pop("_gen", None)
-            out[d] = row
+            row = rows.get(self._urls[d])
+            out[d] = None if row is None else dict(row)
         return out
 
     def get(self, url: str) -> dict:
-        """ES ``GET /<index>/_doc/<id>`` parity (_id = url): one
-        url-hash-bucket point read of the docstore (partition pruning +
-        url row-group pruning — the bucket is url-sorted), newest
-        generation wins, tombstoned docs report found=false. The
-        liveness probe reads the forward (doc_id, url) columns filtered
-        by url; at 10^12-doc scale the doc_id belongs IN the url-sorted
-        docstore row so the probe is the same single bucket read —
-        noted, not yet needed at this index's scale."""
+        """ES ``GET /<index>/_doc/<id>`` parity (_id = url): ``mget`` of
+        one url — newest generation wins, tombstoned docs report
+        found=false."""
         if not self.stats.get("store_fields"):
             raise ValueError("get() requires an index built with store_fields")
-        b = _term_bucket_py(url, int(self.stats.get("stored_buckets", 64)))
-        bucket_dir = os.path.join(self.index_dir, "stored", f"sbucket={b}")
-        out = {"_id": url, "found": False}
-        if not os.path.isdir(bucket_dir):
-            return out
-        tbl = pads.dataset(bucket_dir).to_table(filter=pads.field("url") == url)
-        if tbl.num_rows == 0:
-            return out
-        dele = self.tombstones
-        if dele.size:
-            t = self._forward_ds().to_table(
-                columns=["doc_id"], filter=pads.field("url") == url
-            )
-            ids = t.column("doc_id").to_numpy()
-            live = ids[~np.isin(ids, dele)] if ids.size else ids
-            if live.size == 0:
-                return out  # every version tombstoned: deleted doc
-        rows = tbl.to_pylist()
-        row = max(rows, key=lambda r: r.get("_gen") or 0)
-        row.pop("_gen", None)
-        row.pop("sbucket", None)
-        out["found"] = True
-        out["_source"] = row
-        return out
+        return self.mget([url])["docs"][0]
 
     def mget(self, urls: list[str]) -> dict:
-        """ES ``_mget`` parity (_id = url): the requested ids group by
-        docstore bucket so each bucket is read ONCE with an `isin`
-        row-group-pruned filter — N point reads collapse to
-        (distinct buckets) scans, the ES shard-grouped multi-get
-        shape. Response order matches the request; each doc is the
-        same shape ``get()`` returns."""
+        """ES ``_mget`` parity (_id = url): one keyed docstore read over
+        the requested urls' buckets (``newest_stored_rows``), the ES
+        shard-grouped multi-get shape. A url whose every version is
+        tombstoned is not found; the liveness probe reads the forward
+        (doc_id, url) columns by url. The forward table is not
+        url-sorted, so that probe reads every forward row group's two
+        columns; at 10^12-doc scale the doc_id belongs IN the url-sorted
+        docstore row so the probe is the same bucket read — noted, not
+        yet needed at this index's scale. Response order matches the
+        request; each doc is the ``{"_id", "found"[, "_source"]}``
+        shape ``get()`` returns."""
         from job_searchengine_project_spark.index.tombstone import is_deleted
 
         if not self.stats.get("store_fields"):
             raise ValueError("mget() requires an index built with store_fields")
-        nb = int(self.stats.get("stored_buckets", 64))
-        by_bucket: dict[int, list[str]] = {}
-        for u in urls:
-            by_bucket.setdefault(_term_bucket_py(u, nb), []).append(u)
-        found: dict[str, dict] = {}
-        want = set(urls)
-        for b, us in by_bucket.items():
-            bucket_dir = os.path.join(self.index_dir, "stored", f"sbucket={b}")
-            if not os.path.isdir(bucket_dir):
-                continue
-            tbl = pads.dataset(bucket_dir).to_table(
-                filter=pads.field("url").isin(sorted(set(us)))
-            )
-            for row in tbl.to_pylist():
-                u = row["url"]
-                if u not in want:
-                    continue
-                prev = found.get(u)
-                if prev is None or (row.get("_gen") or 0) >= (
-                    prev.get("_gen") or 0
-                ):
-                    found[u] = row
+        found = newest_stored_rows(
+            self._snapshot("stored"), urls, int(self.stats.get("stored_buckets", 64))
+        )
         dele = self.tombstones
         if dele.size and found:
-            t = self._forward_ds().to_table(
-                columns=["doc_id", "url"],
-                filter=pads.field("url").isin(sorted(found)),
+            t = self._snapshot("forward").read(
+                ["doc_id", "url"], key="url", values=found
             )
-            live_by_url: dict[str, bool] = {}
-            for d, u in zip(
-                t.column("doc_id").to_numpy(), t.column("url").to_pylist()
-            ):
-                live_by_url[u] = live_by_url.get(u, False) or not is_deleted(
-                    dele, int(d)
-                )
-            for u in list(found):
-                if not live_by_url.get(u, False):
-                    del found[u]  # every version tombstoned
+            live = {
+                u
+                for d, u in zip(t["doc_id"].to_pylist(), t["url"].to_pylist())
+                if not is_deleted(dele, d)
+            }
+            found = {u: row for u, row in found.items() if u in live}
         docs = []
         for u in urls:
             row = found.get(u)
             if row is None:
                 docs.append({"_id": u, "found": False})
             else:
-                row = dict(row)
-                row.pop("_gen", None)
-                row.pop("sbucket", None)
-                docs.append({"_id": u, "found": True, "_source": row})
+                docs.append({"_id": u, "found": True, "_source": dict(row)})
         return {"docs": docs}
 
     def _fetch_urls(self, doc_ids: list[int]) -> None:
-        """Memoized batch point-lookup — NEVER loads the whole url
-        column. Doc ids are assigned densely per hash bucket and the
-        forward files hold contiguous per-bucket ranges, so parquet
-        row-group statistics prune the read to the hit rows' groups."""
-        if self._urls is None:
-            self._urls = {}
-        missing = [d for d in doc_ids if d not in self._urls]
+        """Memoized batch point-lookup of hit urls — NEVER loads the
+        whole url column: a doc_id-keyed forward read. The forward
+        files are not doc-id ranges at these sizes (a file's doc_id
+        min/max spans most of its generation), so the read covers each
+        generation's (doc_id, url) columns."""
+        missing = sorted({int(d) for d in doc_ids if d not in self._urls})
         if not missing:
             return
-        t = self._forward_ds().to_table(
-            columns=["doc_id", "url"], filter=pads.field("doc_id").isin(missing)
+        t = self._snapshot("forward").read(
+            ["doc_id", "url"], key="doc_id", values=missing
         )
         self._urls.update(zip(t["doc_id"].to_pylist(), t["url"].to_pylist()))
 
@@ -445,30 +391,21 @@ class SearchEngine:
         return self._urls[doc_id]
 
     def load_segments(self, terms: list[str]) -> dict[str, codec.EncodedPostings]:
-        """Pushdown read: only the buckets/row-groups of the query terms.
+        """Keyed read: only the buckets/row-groups of the query terms.
 
         A term updated G times has G+1 GENERATION rows (segment
         stacking, index/update.py) — doc-range-disjoint, so they merge
         by blob concatenation ordered by first_doc; ``compact_index``
         folds them back to one row."""
         terms = sorted(set(terms))
-        buckets = sorted({_term_bucket_py(t, self.term_buckets) for t in terms})
-        if self._segments_ds is None:
-            # dataset discovery (directory listing + schema) once per
-            # engine — the per-query work is only the pruned reads
-            self._segments_ds = pads.dataset(
-                os.path.join(self.index_dir, "segments"),
-                partitioning="hive",
-            )
-        ds = self._segments_ds
-        expr = (pads.field("term_bucket").isin(buckets)) & (
-            pads.field("term").isin(terms)
+        tbl = self._snapshot("segments").read(
+            key="term",
+            values=terms,
+            parts={_term_bucket_py(t, self.term_buckets) for t in terms},
         )
-        tbl = ds.to_table(filter=expr)
         has_pos = "pos_blob" in tbl.column_names
         parts: dict[str, list[codec.EncodedPostings]] = {}
-        for i in range(tbl.num_rows):
-            row = {c: tbl[c][i].as_py() for c in tbl.column_names}
+        for row in tbl.to_pylist():
             parts.setdefault(row["term"], []).append(
                 codec.EncodedPostings(
                     count=int(row["df"]),
@@ -532,68 +469,66 @@ class SearchEngine:
         candidate's score anyway); for exact page tiling fetch page 1
         with strategy="exhaustive" too (a WAND-produced cursor can
         differ by 1 ulp on exact ties — documented kernel bound)."""
-        terms = sorted(set(query_terms))
-        segs = self.load_segments(terms)
-        if not segs:
-            return []
-        if search_after is not None:
-            if offset:
-                raise ValueError("search_after and offset are exclusive")
-            hits = self._exhaustive_topk(segs, k, after=search_after)
-            out = [SearchHit(doc_id=d, score=s) for d, s in hits]
-            if with_urls or with_fields:
-                self._fetch_urls([h.doc_id for h in out])
-                for h in out:
-                    h.url = self.url_of(h.doc_id)
-            if with_fields:
-                for h in out:
-                    h.fields = self.fields_of(h.doc_id)
-            return out
+        if search_after is not None and offset:
+            raise ValueError("search_after and offset are exclusive")
         depth = k + max(0, offset)
-        if strategy == "auto":
+        hits, _ = self._ranked(query_terms, depth, strategy, after=search_after)
+        hits = hits[offset : offset + k] if offset > 0 else hits
+        return self._attach(
+            [SearchHit(doc_id=d, score=s) for d, s in hits], with_urls, with_fields
+        )
+
+    def _ranked(
+        self,
+        query_terms: list[str],
+        depth: int,
+        strategy: str = "auto",
+        after: tuple[float, int] | None = None,
+        count: bool = False,
+    ) -> tuple[list[tuple[int, float]], int]:
+        """One match-OR evaluation: a single segment read, the strategy
+        router, one kernel call for the top ``depth`` (doc_id, score)
+        — and, with ``count``, the exact live match total taken from
+        the same segments (the exhaustive kernel's accumulated doc set,
+        or the decoded doc-id union beside WAND). The total is 0 when
+        not counted."""
+        segs = self.load_segments(query_terms)
+        if not segs:
+            return [], 0
+        if after is not None:
+            strategy = "exhaustive"  # a cursor needs every candidate's score
+        elif strategy == "auto":
             total = sum(s.count for s in segs.values())
             strategy = "exhaustive" if total > self.DENSE_POSTINGS_CUTOFF else "wand"
-        if strategy == "wand":
-            cursors = [
-                TermCursor(term=t, enc=segs[t], idf=self._idf(segs[t].count))
-                for t in terms
-                if t in segs
-            ]
-            hits = wand_topk(
-                cursors, self.doclens, self.avgdl, depth, k1=BM25_K1, b=BM25_B,
-                deleted=self.tombstones,
-            )
-        elif strategy == "exhaustive":
-            hits = self._exhaustive_topk(segs, depth)
-        else:
+        if strategy == "exhaustive":
+            uniq, sums = self._accumulate(segs)
+            return topk_pairs(uniq, sums, depth, after), int(uniq.size)
+        if strategy != "wand":
             raise ValueError(f"unknown strategy: {strategy}")
-        hits = hits[offset : offset + k] if offset > 0 else hits
-        out = [SearchHit(doc_id=d, score=s) for d, s in hits]
-        if with_urls or with_fields:
-            self._fetch_urls([h.doc_id for h in out])  # one pruned read
-            for h in out:
-                h.url = self.url_of(h.doc_id)
-        if with_fields:
-            for h in out:
-                h.fields = self.fields_of(h.doc_id)
-        return out
-
-    def _exhaustive_topk(
-        self, segs: dict, k: int, after: tuple[float, int] | None = None
-    ) -> list[tuple[int, float]]:
-        """Vectorized term-at-a-time OR scoring (exact, oracle sum order)."""
-        term_arrays = {t: codec.decode_postings(enc) for t, enc in segs.items()}
-        return exhaustive_topk_arrays(
-            term_arrays,
-            idf_of=lambda t: self._idf(segs[t].count),
-            dl_of=lambda docs: self.doclens[docs],
-            avgdl=self.avgdl,
-            k=k,
-            k1=BM25_K1,
-            b=BM25_B,
+        cursors = [
+            TermCursor(term=t, enc=enc, idf=self._idf(enc.count))
+            for t, enc in sorted(segs.items())
+        ]
+        hits = wand_topk(
+            cursors, self.doclens, self.avgdl, depth, k1=BM25_K1, b=BM25_B,
             deleted=self.tombstones,
-            after=after,
         )
+        return hits, int(self._live_docs(segs).size) if count else 0
+
+    def _attach(
+        self, hits: list[SearchHit], with_urls: bool = True, with_fields: bool = False
+    ) -> list[SearchHit]:
+        """Fill the hits' urls (one forward read) and, with
+        ``with_fields``, their stored fields (one docstore read)."""
+        if with_urls or with_fields:
+            self._fetch_urls([h.doc_id for h in hits])
+            for h in hits:
+                h.url = self._urls[h.doc_id]
+        if with_fields:
+            src = self.fields_of_many([h.doc_id for h in hits])
+            for h in hits:
+                h.fields = src[h.doc_id]
+        return hits
 
     def explain(self, doc_id: int, query_terms: list[str]) -> dict:
         """ES `_explain` parity: the per-term BM25 breakdown of one
@@ -652,11 +587,7 @@ class SearchEngine:
         its own side artifact per shard; the vocabulary is orders of
         magnitude smaller than the postings either way."""
         if getattr(self, "_term_dict", None) is None:
-            if self._segments_ds is None:
-                self._segments_ds = pads.dataset(
-                    os.path.join(self.index_dir, "segments"), partitioning="hive"
-                )
-            tbl = self._segments_ds.to_table(columns=["term"])
+            tbl = self._snapshot("segments").read(["term"])
             self._term_dict = sorted(set(tbl.column("term").to_pylist()))
         return self._term_dict
 
@@ -794,12 +725,7 @@ class SearchEngine:
         from job_searchengine_project_spark.index.termdict import prefix_terms
 
         terms = prefix_terms(self.index_dir, prefix)
-        hits = self._constant_score_hits(terms, k, offset)
-        if with_urls and hits:
-            self._fetch_urls([h.doc_id for h in hits])
-            for h in hits:
-                h.url = self.url_of(h.doc_id)
-        return hits
+        return self._attach(self._constant_score_hits(terms, k, offset), with_urls)
 
     def search_wildcard(
         self, pattern: str, k: int = 10, with_urls: bool = True, offset: int = 0
@@ -810,12 +736,7 @@ class SearchEngine:
         from job_searchengine_project_spark.index.termdict import wildcard_terms
 
         terms = wildcard_terms(self.index_dir, pattern)
-        hits = self._constant_score_hits(terms, k, offset)
-        if with_urls and hits:
-            self._fetch_urls([h.doc_id for h in hits])
-            for h in hits:
-                h.url = self.url_of(h.doc_id)
-        return hits
+        return self._attach(self._constant_score_hits(terms, k, offset), with_urls)
 
     def doc_values_docs(
         self,
@@ -1427,12 +1348,19 @@ class SearchEngine:
             total = 0
         else:
             ((kind, spec),) = q.items()
-            if kind == "match":
-                _, text = self._leaf_field_text(spec)
-                hits = self.search_text(text, k=size, offset=frm, with_urls=False)
-                # exact total without scoring: the union of the terms'
-                # live posting docs (one pruned decode, no norms pass)
-                total = len(self._match_docs(self._analyze(text)))
+            if kind in ("match", "fuzzy"):
+                if kind == "match":
+                    terms = self._analyze(self._leaf_field_text(spec)[1])
+                else:
+                    ((_, val),) = spec.items()
+                    term = val.get("value") if isinstance(val, dict) else val
+                    fuzz = val.get("fuzziness", 1) if isinstance(val, dict) else 1
+                    terms = self.fuzzy_expand(term, max_edits=int(fuzz))
+                # one segment read and one kernel call give the page
+                # AND the exact total, from the same loaded postings
+                pairs, total = self._ranked(terms, size + max(0, frm), count=True)
+                pairs = pairs[frm : frm + size] if frm > 0 else pairs
+                hits = [SearchHit(doc_id=d, score=s) for d, s in pairs]
             elif kind == "match_phrase":
                 _, text = self._leaf_field_text(spec)
                 ((_, mp_val),) = spec.items()
@@ -1446,18 +1374,6 @@ class SearchEngine:
                 )
                 total = len(full)
                 hits = full[frm : frm + size]
-            elif kind == "fuzzy":
-                ((_, val),) = spec.items()
-                term = val.get("value") if isinstance(val, dict) else val
-                fuzz = val.get("fuzziness", 1) if isinstance(val, dict) else 1
-                hits = self.search_fuzzy(
-                    [term], k=size, max_edits=int(fuzz), offset=frm,
-                    with_urls=False,
-                )
-                expanded: set[str] = set()
-                for t in [term]:
-                    expanded.update(self.fuzzy_expand(t, max_edits=int(fuzz)))
-                total = len(self._match_docs(sorted(expanded)))
             elif kind in ("prefix", "wildcard"):
                 ((_, val),) = spec.items()
                 pat = val.get("value") if isinstance(val, dict) else val
@@ -1584,11 +1500,10 @@ class SearchEngine:
         src_map = (
             self.fields_of_many([h.doc_id for h in hits]) if with_src else {}
         )
-        urls = self._urls or {}
         out_hits = []
         for h in hits:
             if h.url is None:
-                h.url = urls[h.doc_id]
+                h.url = self._urls[h.doc_id]
             entry = {"_id": h.url, "_score": h.score}
             sv = getattr(self, "_last_sort_values", None)
             if sv is not None:
@@ -1883,16 +1798,11 @@ class SearchEngine:
             for d, s in zip(d_sel.tolist(), scores.tolist()):
                 acc[d] += s
         top = sorted(acc.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
-        out = [SearchHit(doc_id=d, score=s) for d, s in top]
-        with_fields = kw.get("with_fields", False)
-        if kw.get("with_urls", True) or with_fields:
-            self._fetch_urls([h.doc_id for h in out])  # one pruned read
-            for h in out:
-                h.url = self.url_of(h.doc_id)
-        if with_fields:
-            for h in out:
-                h.fields = self.fields_of(h.doc_id)
-        return out
+        return self._attach(
+            [SearchHit(doc_id=d, score=s) for d, s in top],
+            kw.get("with_urls", True),
+            kw.get("with_fields", False),
+        )
 
     def accumulate_scores(self, query_terms: list[str]) -> dict[int, float]:
         """Exhaustive OR scoring over decoded postings: every matched
@@ -1901,8 +1811,13 @@ class SearchEngine:
         loop). Building block for bool queries, multi-field
         most_fields scoring (index/fielded.py) and the engine-side
         oracle."""
-        segs = self.load_segments(sorted(set(query_terms)))
-        uniq, sums = accumulate_arrays(
+        uniq, sums = self._accumulate(self.load_segments(query_terms))
+        return dict(zip(uniq.tolist(), sums.tolist()))
+
+    def _accumulate(self, segs: dict) -> tuple[np.ndarray, np.ndarray]:
+        """``accumulate_arrays`` over loaded segments with this engine's
+        idf, norms and tombstones: (live doc ids, BM25 sums)."""
+        return accumulate_arrays(
             {t: codec.decode_postings(enc) for t, enc in segs.items()},
             idf_of=lambda t: self._idf(segs[t].count),
             dl_of=lambda docs: self.doclens[docs],
@@ -1911,7 +1826,6 @@ class SearchEngine:
             b=BM25_B,
             deleted=self.tombstones,
         )
-        return dict(zip(uniq.tolist(), sums.tolist()))
 
     def search_bruteforce(self, query_terms: list[str], k: int = 10) -> list[SearchHit]:
         """Exhaustive OR scoring over decoded postings (engine-side oracle)."""
@@ -1978,16 +1892,19 @@ class SearchEngine:
 
     def _match_docs(self, terms: list[str]) -> set[int]:
         """Live docs matching >=1 of `terms` (ES match-clause hit set,
-        no scoring): decoded posting doc ids minus tombstones."""
-        segs = self.load_segments(terms)
-        docs: set[int] = set()
-        for enc in segs.values():
-            d, _ = codec.decode_postings(enc)
-            docs.update(d.tolist())
+        no scoring)."""
+        return set(self._live_docs(self.load_segments(terms)).tolist())
+
+    def _live_docs(self, segs: dict) -> np.ndarray:
+        """Sorted live doc ids holding >= 1 of the loaded terms: the
+        decoded posting doc-id union minus tombstones."""
+        if not segs:
+            return np.empty(0, dtype=np.int64)
+        docs = np.unique(
+            np.concatenate([codec.decode_postings(enc)[0] for enc in segs.values()])
+        )
         dele = self.tombstones
-        if dele.size and docs:
-            docs.difference_update(dele.tolist())
-        return docs
+        return docs[~np.isin(docs, dele)] if dele.size else docs
 
     def search_bool(
         self,
@@ -2040,12 +1957,10 @@ class SearchEngine:
         # exact match count for hits.total (the algebra scored every
         # candidate anyway); read back by the DSL layer (_query_hits)
         self._bool_total = len(scored)
-        out = [
-            SearchHit(doc_id=d, score=s)
-            for d, s in scored[max(0, offset) : max(0, offset) + k]
-        ]
-        if with_urls:
-            self._fetch_urls([h.doc_id for h in out])
-            for h in out:
-                h.url = self.url_of(h.doc_id)
-        return out
+        return self._attach(
+            [
+                SearchHit(doc_id=d, score=s)
+                for d, s in scored[max(0, offset) : max(0, offset) + k]
+            ],
+            with_urls,
+        )

@@ -1,11 +1,11 @@
-"""Stored-field attachment for the distributed query paths.
+"""Stored-field reads: the newest docstore row per url.
 
-Given a top-k hits DataFrame (doc_id, score, url), joins the stored
-docstore (ES hit _source parity, reference README.md:19-38) without
-scanning it: the k hit urls are known driver-side (they ARE the query
-result), so the scan filters to their hash buckets (hive partition
-pruning) and urls (row-group pruning inside the url-sorted buckets)
-before a broadcast join against the k rows.
+``newest_stored_rows`` is the driver-side keyed read every engine
+uses for ES hit ``_source`` (reference README.md:19-38): the urls'
+hash buckets only (hive partition pruning), then the url row groups
+inside them. ``attach_stored_fields`` is the Spark-side form: given a
+top-k hits DataFrame (doc_id, score, url) it filters the docstore to
+the same buckets and urls before a broadcast join against the k rows.
 """
 
 from __future__ import annotations
@@ -17,6 +17,29 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from job_searchengine_project_spark.index.build import _term_bucket_py
+
+
+def newest_stored_rows(stored, urls, n_buckets: int) -> dict[str, dict]:
+    """url -> its stored row (``_gen`` dropped) for every url of
+    ``urls`` that has one, read through ``stored`` (an
+    ``iolayout.ParquetSnapshot`` of ``stored/`` by ``sbucket``). A
+    replaced url has one row per version; the newest (max ``_gen``,
+    the writing update's generation base) wins — ES ``_id`` overwrite
+    semantics."""
+    urls = sorted({u for u in urls if u})
+    if not urls:
+        return {}
+    tbl = stored.read(
+        key="url", values=urls, parts={_term_bucket_py(u, n_buckets) for u in urls}
+    )
+    best: dict[str, dict] = {}
+    for row in tbl.to_pylist():
+        prev = best.get(row["url"])
+        if prev is None or (row.get("_gen") or 0) > (prev.get("_gen") or 0):
+            best[row["url"]] = row
+    for row in best.values():
+        row.pop("_gen", None)
+    return best
 
 
 def attach_stored_fields(

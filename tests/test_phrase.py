@@ -70,6 +70,35 @@ def test_phrase_survives_incremental_update(spark, phrase_index):
     assert urls == ["u0", "u4", "u5"]
 
 
+def test_positional_compaction_after_update_keeps_phrase_hits(spark, tmp_path):
+    """A compaction that rewrites a bucket passes its single-generation
+    terms through unchanged; with positions on, a passed-through term
+    of several blocks used to crash the rewrite."""
+    from job_searchengine_project_spark.index.compact import compact_index
+
+    out = str(tmp_path / "idx")
+    words = ["spark", "data", "table", "pipe", "lake"]
+    rows = [
+        (f"u{i}", " ".join(words[(i + j) % 5] for j in range(6)))
+        for i in range(60)
+    ]
+    pages = spark.createDataFrame(rows, "url string, text string")
+    # unsalted, so an untouched term is one row of full blocks: the
+    # pass-through case
+    build_index(spark, pages, out, term_buckets=2, block_size=4,
+                with_positions=True)
+    batch = spark.createDataFrame(
+        [("u60", "spark data fresh"), ("u61", "data spark fresh")],
+        "url string, text string",
+    )
+    update_index(spark, batch, out, target_postings_per_salt=50)
+    want = [(h.url, h.score) for h in SearchEngine(out).search_phrase("spark data", k=100)]
+    assert len(want) > 4
+    compact_index(spark, out)
+    got = [(h.url, h.score) for h in SearchEngine(out).search_phrase("spark data", k=100)]
+    assert got == want
+
+
 def test_sharded_phrase_matches_driver(spark, phrase_index):
     """Distributed phrase over the positional sharded layout is rank-
     and score-identical to the driver engine's search_phrase."""

@@ -176,6 +176,24 @@ def test_fields_of_many_matches_fields_of(spark, tmp_path):
         assert batched[d] == eng.fields_of(d)
 
 
+def test_bm25_scored_counts_a_repeated_term_once(spark, tmp_path):
+    from job_searchengine_project_spark.operators.fulltext import _bm25_scored
+
+    spark.createDataFrame(
+        [(0, "spark data table"), (1, "spark spark lake"), (2, "data pipe"),
+         (3, "lake lake pipe")],
+        "doc_id long, text string",
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+
+    def scores(terms):
+        rows = _bm25_scored(spark, str(tmp_path), terms).collect()
+        return sorted(tuple(r) for r in rows)
+
+    want = scores(["data", "spark"])
+    assert len(want) == 3
+    assert scores(["spark", "data", "spark"]) == want
+
+
 def test_packed_shuffle_partials_identical(spark):
     """The packed-blob encode path (pack map-side -> blob shuffle ->
     _encode_packed_arrow) must emit exactly the partial rows of the

@@ -353,7 +353,7 @@ def _matrix_sweep(spark, out, live_texts: dict):
     n_of = {u: len(t) for u, t in live_texts.items()}
     fwd = {
         r["doc_id"]: r["url"]
-        for r in eng._forward_ds().to_table(columns=["doc_id", "url"]).to_pylist()
+        for r in eng._snapshot("forward").read(["doc_id", "url"]).to_pylist()
     }
     dele = set(eng.tombstones.tolist())
     got_f = {
@@ -439,7 +439,7 @@ def test_lifecycle_matrix_sidecars_consistent(spark, tmp_path, crash):
         .to_table(columns=["doc_id"]).column("doc_id").to_pylist()
     )
     fwd_ids = set(
-        eng._forward_ds().to_table(columns=["doc_id"]).column("doc_id").to_pylist()
+        eng._snapshot("forward").read(["doc_id"]).column("doc_id").to_pylist()
     )
     assert dv_ids == fwd_ids
     # variants rebuilt on the purged index become fresh again
