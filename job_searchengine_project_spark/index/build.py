@@ -7,18 +7,26 @@ the reference's six daemons, SURVEY.md §3.2):
       -> prepare_docs           (Arrow UDF tokenize; tf computed in-UDF
                                  = map-side partial aggregation)
       -> write docstore+forward (stage "docs", resumable checkpoint)
-      -> explode to postings    (term, doc_id, tf, doclen)
-      -> df-per-term agg        (map-side combined; head-term detection)
-      -> salt assignment        explicit skew split: head terms with
-                                df > target get n_salts doc-RANGE
-                                partitions (salt = doc_id // range) so
-                                partial segments are doc-disjoint
-      -> repartition(term,salt) -> applyInPandas encode (numpy codec)
+      -> sampled df estimate    (head-term detection, _head_terms)
+      -> pack forward rows      (mapInArrow _pack_forward_arrow: per
+                                input partition, one row per
+                                (term, salt) group holding the
+                                postings' doc ids / tfs / tf-norms
+                                [/ positions] as binary blobs; salt
+                                is the explicit skew split: head terms
+                                with df > target get n_salts doc-RANGE
+                                partitions, salt = doc_id // range, so
+                                partial segments are doc-disjoint)
+      -> repartition(term,salt) -> mapInArrow encode
+                                (_encode_packed_arrow, numpy codec)
       -> groupBy(term)          merge partials by blob CONCATENATION
                                 (only compressed bytes shuffle here —
                                 the whole point of salting first)
       -> write segments parquet partitioned by term_bucket
          (+ stats, + per-partition lineage metrics)
+
+``update_index`` and the doc-range shard derive run the same pack ->
+repartition(term, salt) -> encode pipeline; only the salt differs.
 
 Skew rationale: Zipfian head terms would otherwise send >20% of all
 posting rows through single reducers (north_rule: skew handled
@@ -193,22 +201,95 @@ _PACKED_SCHEMA = (
 
 _PACKED_SCHEMA_B = "term string, salt int, term_bucket int, " \
     "docs_blob binary, tfs_blob binary, tfn_blob binary"
+_PACKED_SCHEMA_B_POS = _PACKED_SCHEMA_B + ", pos_blob binary"
+
+
+def _head_terms(fwd: DataFrame, n_docs: int, target_postings_per_salt: int) -> dict:
+    """{term: n_salts} for the head terms of a forward table: terms
+    whose estimated df exceeds ``target_postings_per_salt``. The df
+    comes from a doc SAMPLE: salting only needs df *estimates* (any
+    salt layout merges correctly), sampling keeps this scan
+    ~constant-cost as the corpus grows, and the map-side combine makes
+    the agg itself skew-immune. The map is tiny by construction."""
+    frac = min(1.0, 100_000 / max(n_docs, 1))
+    sampled = fwd.sample(fraction=frac, seed=42) if frac < 1.0 else fwd
+    df_est = (
+        sampled.select(F.explode("terms").alias("t"))
+        .groupBy(F.col("t.term").alias("term"))
+        .agg((F.count("*") / F.lit(frac)).alias("df_est"))
+    )
+    head = df_est.filter(F.col("df_est") > target_postings_per_salt).select(
+        "term",
+        F.ceil(F.col("df_est") / target_postings_per_salt).cast("int").alias("n_salts"),
+    )
+    return {r["term"]: int(r["n_salts"]) for r in head.collect()}
+
+
+def _pack_forward(fwd: DataFrame, **kw) -> DataFrame:
+    """Packed (term, salt, term_bucket, blobs) rows of a forward table,
+    with a pos_blob when its terms carry positions (see
+    _pack_forward_arrow; ``kw`` goes to the kernel). Coalesced to
+    the session parallelism first: packing collapses a partition's
+    postings to (term, salt) groups, so FEWER, larger pack tasks raise
+    postings-per-blob toward |partition| / |vocab| (guide §2.2: fewer
+    larger map tasks) while still feeding every core."""
+    with_pos = "pos" in fwd.schema["terms"].dataType.elementType.names
+    par = max(1, fwd.sparkSession.sparkContext.defaultParallelism)
+    return fwd.select("doc_id", "doclen", "terms").coalesce(par).mapInArrow(
+        lambda it: _pack_forward_arrow(it, **kw),
+        schema=_PACKED_SCHEMA_B_POS if with_pos else _PACKED_SCHEMA_B,
+    )
+
+
+def _encode_packed(packed: DataFrame, block_size: int) -> DataFrame:
+    """The (term, salt) repartition of packed rows, then PARTITION-wise
+    encode (one Arrow call per partition, vectorized codec inside):
+    one partial row per (term, salt) group."""
+    with_pos = "pos_blob" in packed.columns
+    shuffle_n = int(packed.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return packed.repartition(shuffle_n, "term", "salt").mapInArrow(
+        lambda it: _encode_packed_arrow(it, block_size=block_size),
+        schema=PARTIAL_SCHEMA_POS if with_pos else PARTIAL_SCHEMA,
+    )
+
+
+def _ragged_take(values: "np.ndarray", lens: "np.ndarray", order: "np.ndarray"):
+    """Runs of ``values`` (run i holds lens[i] consecutive elements)
+    reordered so the result is run order[0], then order[1], ...
+    Returns (values, offsets): offsets are the result's run starts
+    plus the final end."""
+    src = np.zeros(lens.size + 1, dtype=np.int64)
+    np.cumsum(lens, out=src[1:])
+    lens_o = lens[order]
+    dst = np.zeros(lens.size + 1, dtype=np.int64)
+    np.cumsum(lens_o, out=dst[1:])
+    idx = np.repeat(src[:-1][order] - dst[:-1], lens_o) + np.arange(dst[-1])
+    return values[idx], dst
 
 
 def _pack_forward_arrow(batches, avgdl: float, n_docs: int, head_map: dict,
-                        term_buckets: int, shard_rng: int | None = None):
+                        term_buckets: int, shard_rng: int | None = None,
+                        base: int = 0):
     """Pack kernel fed DIRECTLY by the forward table's nested rows
-    (r6): the old pipeline exploded ~40 posting rows per doc JVM-side
-    and then converted every one of them through the Arrow boundary
-    into the pack/encode kernels — row-at-a-time ArrowWriter
-    conversion of the exploded rows, not the shuffle itself, dominated
-    the segments stage. Reading the forward rows moves the same leaf
+    (r6): exploding ~40 posting rows per doc JVM-side and converting
+    every one of them through the Arrow boundary — row-at-a-time
+    ArrowWriter conversion, not the shuffle itself — dominated the
+    segments stage. Reading the forward rows moves the same leaf
     values as columnar array regions (no per-posting row exists
-    anywhere), and the salt assignment — identical arithmetic to the
-    broadcast head join (ceil and trunc agree exactly for int inputs
-    < 2^31) — plus the term_bucket derivation run at VOCABULARY cost
-    in-kernel. Emitted groups are byte-identical to the exploded
-    form's (test-gated)."""
+    anywhere), and the salt assignment plus the term_bucket
+    derivation run at VOCABULARY cost in-kernel.
+
+    Salt of a head term with n_salts > 1 is
+    ``(doc_id - base) // ceil(n_docs / n_salts)``, else 0: ``base`` is
+    the first doc id of the packed range (0 for a build, the old
+    n_docs for an update batch of ``n_docs`` docs). ``shard_rng``
+    instead splits EVERY term by the same doc range (the sharded
+    layout: salt == shard). Both equal the former Spark expressions
+    ``((doc_id - base) / range).cast("int")`` exactly (ceil and trunc
+    agree for int inputs < 2^31; test-gated).
+
+    Positional forward rows (``terms.pos``) add a ``pos_blob``: each
+    posting's tf positions, int32, in the postings' order."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -221,6 +302,7 @@ def _pack_forward_arrow(batches, avgdl: float, n_docs: int, head_map: dict,
         counts = pc.list_value_length(terms_col).to_numpy().astype(np.int64)
         flat = pc.list_flatten(terms_col)
         tfs_all = flat.field("tf").to_numpy().astype(np.int64)
+        with_pos = flat.type.get_field_index("pos") >= 0
         d = pc.dictionary_encode(flat.field("term"))
         codes = d.indices.to_numpy().astype(np.int64)
         vocab = d.dictionary.to_pylist()
@@ -242,7 +324,7 @@ def _pack_forward_arrow(batches, avgdl: float, n_docs: int, head_map: dict,
             salts = (docs_rep // shard_rng).astype(np.int64)
         else:
             salts = np.where(
-                ns_vocab[codes] == 1, 0, docs_rep // rps_vocab[codes]
+                ns_vocab[codes] == 1, 0, (docs_rep - base) // rps_vocab[codes]
             ).astype(np.int64)
         tfn = tfs_all / (
             tfs_all + BM25_K1 * (1.0 - BM25_B + BM25_B * (dls_rep / avgdl))
@@ -263,19 +345,23 @@ def _pack_forward_arrow(batches, avgdl: float, n_docs: int, head_map: dict,
         # group count approaches the posting count and a per-group
         # .tobytes() loop would dominate the kernel (guide §4.2).
         terms_arr = pc.take(d.dictionary, pa.array(tc[starts]))
-        yield pa.RecordBatch.from_arrays(
-            [
-                terms_arr.cast(pa.string()),
-                pa.array(sa[starts].astype(np.int32), type=pa.int32()),
-                pa.array(
-                    tb_vocab[tc[starts]].astype(np.int32), type=pa.int32()
-                ),
-                _binary_from_fixed(docs_s, bounds, 8),
-                _binary_from_fixed(tfs_s.astype(np.int32), bounds, 4),
-                _binary_from_fixed(tfn_s, bounds, 8),
-            ],
-            ["term", "salt", "term_bucket", "docs_blob", "tfs_blob", "tfn_blob"],
-        )
+        cols = [
+            terms_arr.cast(pa.string()),
+            pa.array(sa[starts].astype(np.int32), type=pa.int32()),
+            pa.array(tb_vocab[tc[starts]].astype(np.int32), type=pa.int32()),
+            _binary_from_fixed(docs_s, bounds, 8),
+            _binary_from_fixed(tfs_s.astype(np.int32), bounds, 4),
+            _binary_from_fixed(tfn_s, bounds, 8),
+        ]
+        names = ["term", "salt", "term_bucket", "docs_blob", "tfs_blob", "tfn_blob"]
+        if with_pos:
+            pos_all = pc.list_flatten(flat.field("pos")).to_numpy()
+            pos_s, p_off = _ragged_take(
+                pos_all.astype(np.int32, copy=False), tfs_all, order
+            )
+            cols.append(_binary_from_fixed(pos_s, p_off[bounds], 4))
+            names.append("pos_blob")
+        yield pa.RecordBatch.from_arrays(cols, names)
 
 
 def _fixed_from_binary(arr, dtype, width: int):
@@ -300,9 +386,15 @@ def _fixed_from_binary(arr, dtype, width: int):
 def _binary_from_fixed(values: "np.ndarray", bounds: "np.ndarray", width: int):
     """Arrow binary array over a fixed-width numpy array: one data
     buffer (the array's own bytes) + int32 offsets at element
-    granularity x width. bounds = group starts + final end."""
+    granularity x width. bounds = group starts + final end. Raises
+    ValueError instead of letting an offset past 2 GiB wrap."""
     import pyarrow as pa
 
+    if int(bounds[-1]) * width >= 2**31:
+        raise ValueError(
+            f"_binary_from_fixed: {int(bounds[-1]) * width} bytes exceed "
+            "the int32 offsets of an Arrow binary array"
+        )
     data = values.tobytes()
     offsets = (bounds * width).astype(np.int32)
     return pa.Array.from_buffers(
@@ -316,7 +408,9 @@ def _encode_packed_arrow(batches, block_size: int):
     binary arrays, flatten, lexsort — identical (term, salt, doc)
     multiset and order as the per-posting form, so the emitted partial
     rows are byte-identical — then the same vectorized grouped codec
-    pass."""
+    pass. Rows with a ``pos_blob`` carry each posting's tf positions
+    through the same lexsort and encode per group with
+    ``codec.encode_postings(..., positions=...)``."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -345,8 +439,14 @@ def _encode_packed_arrow(batches, block_size: int):
     )
     terms_codes = np.repeat(row_tc, counts)
     salts = np.repeat(row_salts, counts)
+    with_pos = "pos_blob" in tbl.column_names
 
     order = np.lexsort((docs, salts, terms_codes))
+    if with_pos:
+        pos, _ = _fixed_from_binary(
+            tbl.column("pos_blob").combine_chunks(), np.int32, 4
+        )
+        pos, p_off = _ragged_take(pos, tfs, order)
     tc, sa, docs, tfs, tfn = (
         terms_codes[order], salts[order], docs[order], tfs[order], tfn[order]
     )
@@ -355,16 +455,25 @@ def _encode_packed_arrow(batches, block_size: int):
     change[1:] = (tc[1:] != tc[:-1]) | (sa[1:] != sa[:-1])
     starts = np.flatnonzero(change)
     ends = np.append(starts[1:], tc.size)
-    encs = codec.encode_postings_grouped(
-        starts, ends, docs, tfs, tfn, block_size=block_size
-    )
-    yield from _emit_partial_batch(starts, encs, tc, sa, terms_uniq)
+    if with_pos:
+        encs = [
+            codec.encode_postings(
+                docs[s:e], tfs[s:e], tfn[s:e], block_size=block_size,
+                positions=pos[p_off[s] : p_off[e]],
+            )
+            for s, e in zip(starts, ends)
+        ]
+    else:
+        encs = codec.encode_postings_grouped(
+            starts, ends, docs, tfs, tfn, block_size=block_size
+        )
+    yield from _emit_partial_batch(starts, encs, tc, sa, terms_uniq, with_pos)
 
 
-def _emit_partial_batch(starts, encs, tc, sa, terms_uniq):
+def _emit_partial_batch(starts, encs, tc, sa, terms_uniq, with_pos):
     import pyarrow as pa
 
-    cols: dict[str, list] = {c: [] for c in _PARTIAL_COLS}
+    cols: dict[str, list] = {c: [] for c in _PARTIAL_COLS_POS}
     for s, enc in zip(starts, encs):
         cols["term"].append(terms_uniq[tc[s]])
         cols["salt"].append(int(sa[s]))
@@ -378,24 +487,25 @@ def _emit_partial_batch(starts, encs, tc, sa, terms_uniq):
         cols["block_tf_bytes"].append(enc.block_tf_bytes)
         cols["block_max_tfnorm"].append(enc.block_max_tfnorm)
         cols["n_parts"].append(1)
-        cols["bytes_written"].append(len(enc.doc_blob) + len(enc.tf_blob))
+        cols["bytes_written"].append(
+            len(enc.doc_blob) + len(enc.tf_blob) + len(enc.pos_blob)
+        )
+        cols["pos_blob"].append(enc.pos_blob)
+        cols["block_pos_bytes"].append(enc.block_pos_bytes)
+    types = {
+        "term": pa.string(), "salt": pa.int32(), "df": pa.int64(),
+        "first_doc": pa.int64(), "doc_blob": pa.binary(),
+        "tf_blob": pa.binary(), "block_n": pa.list_(pa.int32()),
+        "block_last_doc": pa.list_(pa.int64()),
+        "block_doc_bytes": pa.list_(pa.int32()),
+        "block_tf_bytes": pa.list_(pa.int32()),
+        "block_max_tfnorm": pa.list_(pa.float64()), "n_parts": pa.int32(),
+        "bytes_written": pa.int64(), "pos_blob": pa.binary(),
+        "block_pos_bytes": pa.list_(pa.int32()),
+    }
+    names = _PARTIAL_COLS_POS if with_pos else _PARTIAL_COLS
     yield pa.RecordBatch.from_arrays(
-        [
-            pa.array(cols["term"], type=pa.string()),
-            pa.array(cols["salt"], type=pa.int32()),
-            pa.array(cols["df"], type=pa.int64()),
-            pa.array(cols["first_doc"], type=pa.int64()),
-            pa.array(cols["doc_blob"], type=pa.binary()),
-            pa.array(cols["tf_blob"], type=pa.binary()),
-            pa.array(cols["block_n"], type=pa.list_(pa.int32())),
-            pa.array(cols["block_last_doc"], type=pa.list_(pa.int64())),
-            pa.array(cols["block_doc_bytes"], type=pa.list_(pa.int32())),
-            pa.array(cols["block_tf_bytes"], type=pa.list_(pa.int32())),
-            pa.array(cols["block_max_tfnorm"], type=pa.list_(pa.float64())),
-            pa.array(cols["n_parts"], type=pa.int32()),
-            pa.array(cols["bytes_written"], type=pa.int64()),
-        ],
-        _PARTIAL_COLS,
+        [pa.array(cols[c], type=types[c]) for c in names], names
     )
 
 
@@ -468,70 +578,6 @@ def _encode_partition_arrow(batches, avgdl: float, block_size: int):
         ],
         _PARTIAL_COLS,
     )
-
-
-def _encode_partition(batches, avgdl: float, block_size: int):
-    """mapInPandas kernel: encode every (term, salt) group in the
-    partition. One Arrow round-trip per partition; the group loop is
-    numpy slicing over lexsorted arrays (per-group cost ~µs, vs ~ms
-    for per-group applyInPandas dispatch)."""
-    parts = list(batches)
-    if not parts:  # empty shuffle partition (partitions > groups)
-        return
-    pdf = pd.concat(parts, ignore_index=True)
-    if pdf.empty:
-        return
-    terms_codes, terms_uniq = pd.factorize(pdf["term"], sort=False)
-    salts = pdf["salt"].to_numpy()
-    docs = pdf["doc_id"].to_numpy(dtype=np.int64)
-    tfs = pdf["tf"].to_numpy(dtype=np.int64)
-    dls = pdf["doclen"].to_numpy(dtype=np.float64)
-    tfn = tfs / (tfs + BM25_K1 * (1.0 - BM25_B + BM25_B * (dls / avgdl)))
-    with_pos = "pos" in pdf.columns
-
-    order = np.lexsort((docs, salts, terms_codes))
-    tc, sa, docs, tfs, tfn = (
-        terms_codes[order], salts[order], docs[order], tfs[order], tfn[order]
-    )
-    flat_pos = p_off = None
-    if with_pos:
-        # one flat concatenation in row order; group slices via cumsum
-        pos_lists = pdf["pos"].to_numpy()[order]
-        flat_pos = (
-            np.concatenate([np.asarray(x, dtype=np.int64) for x in pos_lists])
-            if len(pos_lists)
-            else np.empty(0, dtype=np.int64)
-        )
-        p_off = np.zeros(tfs.size + 1, dtype=np.int64)
-        np.cumsum(tfs, out=p_off[1:])
-    # group boundaries where (term, salt) changes
-    change = np.empty(tc.size, dtype=bool)
-    change[0] = True
-    change[1:] = (tc[1:] != tc[:-1]) | (sa[1:] != sa[:-1])
-    starts = np.flatnonzero(change)
-    ends = np.append(starts[1:], tc.size)
-
-    rows = []
-    if with_pos:
-        for s, e in zip(starts, ends):
-            enc = codec.encode_postings(
-                docs[s:e], tfs[s:e], tfn[s:e], block_size=block_size,
-                positions=flat_pos[p_off[s] : p_off[e]],
-            )
-            row = _enc_to_row(str(terms_uniq[tc[s]]), enc, 1, with_pos=True)
-            row["salt"] = int(sa[s])
-            rows.append(row)
-    else:
-        # one vectorized pass over the whole partition (byte-identical
-        # to per-group encode_postings; per-group overhead dominated)
-        encs = codec.encode_postings_grouped(
-            starts, ends, docs, tfs, tfn, block_size=block_size
-        )
-        for s, enc in zip(starts, encs):
-            row = _enc_to_row(str(terms_uniq[tc[s]]), enc, 1, with_pos=False)
-            row["salt"] = int(sa[s])
-            rows.append(row)
-    yield pd.DataFrame(rows, columns=_PARTIAL_COLS_POS if with_pos else _PARTIAL_COLS)
 
 
 def _merge_partition(batches, term_buckets: int):
@@ -626,8 +672,9 @@ def _term_bucket_py(term: str, buckets: int) -> int:
 
 
 def _url_bucket_expr(buckets: int):
-    """JVM twin of _term_bucket_py applied to url (equality tested for
-    the term variant; same expression shape)."""
+    """JVM twin of _term_bucket_py applied to url: stored-field readers
+    locate a url's bucket with _term_bucket_py, so every stored-field
+    point-read test checks that the two agree."""
     return F.pmod(
         F.conv(F.substring(F.sha2(F.col("url"), 256), 1, 16), 16, 10).cast(
             "decimal(25,0)"
@@ -848,73 +895,16 @@ def build_index(
                 ]
                 done_buckets = {int(x) for x in sel["partition_id"]}
         fwd = spark.read.parquet(forward_dir)
-        # JVM-side twin of _term_bucket_py (equality is tested):
-        # first 8 bytes of sha256(term), big-endian, mod buckets
-        bucket_expr = F.pmod(
-            F.conv(F.substring(F.sha2(F.col("term"), 256), 1, 16), 16, 10).cast(
-                "decimal(25,0)"
-            ),
-            F.lit(term_buckets),
-        ).cast("int")
-        postings = fwd.select(
-            "doc_id", "doclen", F.explode("terms").alias("t")
-        ).select(
-            F.col("t.term").alias("term"),
-            "doc_id",
-            F.col("t.tf").alias("tf"),
-            "doclen",
-            *([F.col("t.pos").alias("pos")] if with_positions else []),
-        ).withColumn("term_bucket", bucket_expr)
-        # head-term detection from a doc SAMPLE: salting only needs df
-        # *estimates* (any salt layout merges correctly); sampling keeps
-        # this scan ~constant-cost as the corpus grows. Map-side combine
-        # makes the agg itself skew-immune.
-        frac = min(1.0, 100_000 / max(n_docs, 1))
-        sampled = fwd.sample(fraction=frac, seed=42) if frac < 1.0 else fwd
-        df_est = (
-            sampled.select(F.explode("terms").alias("t"))
-            .groupBy(F.col("t.term").alias("term"))
-            .agg((F.count("*") / F.lit(frac)).alias("df_est"))
-        )
-        head = df_est.filter(F.col("df_est") > target_postings_per_salt).select(
-            "term",
-            F.ceil(F.col("df_est") / target_postings_per_salt).cast("int").alias("n_salts"),
-        )
         _tick("df sample plan")
-        if with_positions:
-            range_per_salt = F.ceil(F.lit(n_docs) / F.col("n_salts"))
-            src_all = (
-                postings.join(F.broadcast(head), "term", "left")
-                .withColumn("n_salts", F.coalesce(F.col("n_salts"), F.lit(1)))
-                .withColumn(
-                    "salt",
-                    F.when(F.col("n_salts") == 1, F.lit(0)).otherwise(
-                        (F.col("doc_id") / range_per_salt).cast("int")
-                    ),
-                )
-                .drop("n_salts")
-            )
-        else:
-            # r6: the head map is tiny by construction (terms with
-            # df > target_postings_per_salt); collect it and pack the
-            # postings straight off the forward table's nested rows —
-            # no explode, no per-posting Arrow conversion, no
-            # broadcast salt join (see _pack_forward_arrow)
-            head_map = {r["term"]: int(r["n_salts"]) for r in head.collect()}
-            _tick("head collect")
-            # coalesce to the session parallelism: packing collapses a
-            # partition's postings to (term, salt) groups, so FEWER,
-            # larger pack tasks raise postings-per-blob toward
-            # |partition| / |vocab| (guide §2.2: fewer larger map
-            # tasks) while still feeding every core
-            par = max(1, spark.sparkContext.defaultParallelism)
-            src_all = fwd.select("doc_id", "doclen", "terms").coalesce(par).mapInArrow(
-                lambda it: _pack_forward_arrow(
-                    it, avgdl=avgdl, n_docs=n_docs,
-                    head_map=head_map, term_buckets=term_buckets,
-                ),
-                schema=_PACKED_SCHEMA_B,
-            )
+        head_map = _head_terms(fwd, n_docs, target_postings_per_salt)
+        _tick("head collect")
+        # postings packed straight off the forward table's nested rows:
+        # no explode, no per-posting Arrow conversion, no broadcast salt
+        # join (see _pack_forward_arrow)
+        src_all = _pack_forward(
+            fwd, avgdl=avgdl, n_docs=n_docs,
+            head_map=head_map, term_buckets=term_buckets,
+        )
         shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
         # buckets still to build, split into checkpoint groups: each
         # group is one Spark job committed with dynamic partition
@@ -932,12 +922,11 @@ def build_index(
             todo[g::checkpoint_groups] for g in range(min(checkpoint_groups, max(len(todo), 1)))
         ]
         groups = [g for g in groups if g]
-        # with >1 checkpoint group, stage the salted/packed postings
-        # ONCE (partitioned by group) so each group's job reads only
-        # its pruned slice — re-running the tokenized scan per group
+        # with >1 checkpoint group, stage the packed postings ONCE
+        # (partitioned by group) so each group's job reads only its
+        # pruned slice — re-running the forward scan and pack per group
         # would multiply the heaviest pass by the group count (the
-        # packed form additionally stages ~20 B/posting blobs, not
-        # per-posting rows)
+        # staged rows are ~20 B/posting blobs, not per-posting rows)
         staged_dir = os.path.join(out_dir, "_staged_postings")
         if len(groups) > 1:
             group_of = {b: gi for gi, bs in enumerate(groups) for b in bs}
@@ -963,32 +952,10 @@ def build_index(
                 else:
                     sub = src_all
                 sub = sub.drop("term_bucket")
-                # the (term, salt) repartition, then PARTITION-wise
-                # encode (one Python/Arrow call per partition, numpy
-                # group loop inside — per-group applyInPandas dispatch
-                # would dominate with Zipfian vocabularies). The
-                # non-positional path shuffles PACKED blob rows
-                # (~20 B/posting, a handful of rows per term) produced
-                # straight off the forward scan — per-posting rows
-                # never exist anywhere in the pipeline (r6).
-                if with_positions:
-                    partials = sub.repartition(
-                        shuffle_n, "term", "salt"
-                    ).mapInPandas(
-                        lambda it: _encode_partition(
-                            it, avgdl=avgdl, block_size=block_size
-                        ),
-                        schema=PARTIAL_SCHEMA_POS,
-                    )
-                else:
-                    partials = sub.repartition(
-                        shuffle_n, "term", "salt"
-                    ).mapInArrow(
-                        lambda it: _encode_packed_arrow(
-                            it, block_size=block_size
-                        ),
-                        schema=PARTIAL_SCHEMA,
-                    )
+                # PACKED blob rows (~20 B/posting, a handful of rows
+                # per term) shuffle by (term, salt) — per-posting rows
+                # never exist anywhere in the pipeline (r6)
+                partials = _encode_packed(sub, block_size)
                 # merge shuffle moves only compressed blobs (the point
                 # of salting-then-encoding); blocks concat directly
                 segments = partials.repartition(shuffle_n, "term").mapInPandas(

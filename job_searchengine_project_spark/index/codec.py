@@ -1,14 +1,18 @@
 """Posting-list codec: delta + varbyte + block-max metadata.
 
-Pure numpy kernels (no Python per-element loops) used inside
-``applyInPandas`` during the segment build and inside the WAND reader
-at query time. The reference delegates this layer to Lucene
-(schema/es/es.sh — the ES index); this is our from-scratch equivalent.
+Pure numpy kernels (no Python per-element loops) used inside the
+segment build's ``mapInArrow`` encode kernel (index/build.py
+``_encode_packed_arrow``, shared by build, update and the shard
+derive) and inside the query-time readers. The reference delegates
+this layer to Lucene (schema/es/es.sh — the ES index); this is our
+from-scratch equivalent.
 
 Layout per term segment:
 - postings are sorted by doc_id and cut into blocks of ``block_size``;
-- each block's doc_ids are encoded as [first_doc absolute, then
-  deltas-1? no: plain deltas], varbyte; tfs varbyte as-is;
+- each block's doc_ids are encoded as the block's first doc_id
+  (absolute), then plain deltas, varbyte; tfs varbyte as-is;
+- positional indexes add each posting's positions, delta+varbyte with
+  the posting's first position absolute, in the same blocks;
 - per-block metadata: posting count, byte lengths of both blobs,
   last doc_id, and the block's max BM25 tf-norm (the block-max bound
   WAND uses to skip blocks without decoding them).

@@ -44,11 +44,7 @@ import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from job_searchengine_project_spark.index.build import (
-    PARTIAL_SCHEMA,
-    PARTIAL_SCHEMA_POS,
-    _encode_partition,
-)
+from job_searchengine_project_spark.index.build import _encode_packed, _pack_forward
 
 SHARDS_META = "shards_meta.json"
 NORMS_DIR = "shard_norms"
@@ -74,50 +70,14 @@ def build_sharded_segments(
     rng = max(1, -(-n_docs // n_shards))  # ceil
 
     fwd = spark.read.parquet(os.path.join(index_dir, "forward"))
-    term_fields = [f.name for f in fwd.schema["terms"].dataType.elementType.fields]
-    postings = fwd.select(
-        "doc_id", "doclen", F.explode("terms").alias("t")
-    ).select(
-        F.col("t.term").alias("term"),
-        "doc_id",
-        F.col("t.tf").alias("tf"),
-        "doclen",
-        *([F.col("t.pos").alias("pos")] if "pos" in term_fields else []),
-        (F.col("doc_id") / F.lit(rng)).cast("int").alias("salt"),  # = shard
-    )
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if "pos" in term_fields:
-        shards = postings.repartition(shuffle_n, "term", "salt").mapInPandas(
-            lambda it: _encode_partition(it, avgdl=avgdl, block_size=block_size),
-            schema=PARTIAL_SCHEMA_POS,
-        ).withColumnRenamed("salt", "shard")
-    else:
-        # packed-blob derivation straight off the forward table (r6,
-        # same kernels as the base build): no explode, no per-posting
-        # Arrow conversion; the derive exchange moves per-(term, shard)
-        # binary blobs, not a row per posting
-        from job_searchengine_project_spark.index.build import (
-            _PACKED_SCHEMA_B,
-            _encode_packed_arrow,
-            _pack_forward_arrow,
-        )
-
-        par = max(1, spark.sparkContext.defaultParallelism)
-        packed = fwd.select("doc_id", "doclen", "terms").coalesce(par).mapInArrow(
-            lambda it: _pack_forward_arrow(
-                it, avgdl=avgdl, n_docs=n_docs, head_map={},
-                term_buckets=1, shard_rng=rng,
-            ),
-            schema=_PACKED_SCHEMA_B,
-        ).drop("term_bucket")
-        shards = (
-            packed.repartition(shuffle_n, "term", "salt")
-            .mapInArrow(
-                lambda it: _encode_packed_arrow(it, block_size=block_size),
-                schema=PARTIAL_SCHEMA,
-            )
-            .withColumnRenamed("salt", "shard")
-        )
+    # the build's pack -> (term, salt) -> encode pipeline with salt ==
+    # shard for every term: the derive exchange moves per-(term, shard)
+    # binary blobs, not a row per posting, and needs no merge stage
+    packed = _pack_forward(
+        fwd, avgdl=avgdl, n_docs=n_docs, head_map={}, term_buckets=1,
+        shard_rng=rng,
+    ).drop("term_bucket")
+    shards = _encode_packed(packed, block_size).withColumnRenamed("salt", "shard")
     out = os.path.join(index_dir, "shards")
     (
         shards.repartition("shard")

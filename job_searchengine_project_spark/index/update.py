@@ -49,13 +49,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from job_searchengine_project_spark.index.build import (
-    PARTIAL_SCHEMA,
-    PARTIAL_SCHEMA_POS,
     SEGMENT_SCHEMA,
     SEGMENT_SCHEMA_POS,
     _append_lineage,
-    _encode_partition,
+    _encode_packed,
+    _head_terms,
     _merge_partition,
+    _pack_forward,
     _write_stats_dict,
 )
 from job_searchengine_project_spark.index.prepare import prepare_docs
@@ -203,7 +203,6 @@ def update_index(
     forward_dir = os.path.join(out_dir, "forward")
     segments_dir = os.path.join(out_dir, "segments")
     with_pos = bool(stats.get("positions"))
-    partial_schema = PARTIAL_SCHEMA_POS if with_pos else PARTIAL_SCHEMA
     segment_schema = SEGMENT_SCHEMA_POS if with_pos else SEGMENT_SCHEMA
 
     # empty-batch guard BEFORE any side effect: an empty batch is a
@@ -269,41 +268,16 @@ def update_index(
     m, new_tokens = int(agg["m"]), int(agg["tok"] or 0)
 
     # --- encode new postings (frozen avgdl) -------------------------------
-    term_fields = [f.name for f in fwd_new.schema["terms"].dataType.elementType.fields]
-    postings = fwd_new.select(
-        "doc_id", "doclen", F.explode("terms").alias("t")
-    ).select(
-        F.col("t.term").alias("term"), "doc_id", F.col("t.tf").alias("tf"), "doclen",
-        *([F.col("t.pos").alias("pos")] if "pos" in term_fields else []),
-    )
-    frac = min(1.0, 100_000 / max(m, 1))
-    sampled = fwd_new.sample(fraction=frac, seed=42) if frac < 1.0 else fwd_new
-    df_est = (
-        sampled.select(F.explode("terms").alias("t"))
-        .groupBy(F.col("t.term").alias("term"))
-        .agg((F.count("*") / F.lit(frac)).alias("df_est"))
-    )
-    head = df_est.filter(F.col("df_est") > target_postings_per_salt).select(
-        "term",
-        F.ceil(F.col("df_est") / target_postings_per_salt).cast("int").alias("n_salts"),
-    )
-    range_per_salt = F.ceil(F.lit(m) / F.col("n_salts"))
-    salted = (
-        postings.join(F.broadcast(head), "term", "left")
-        .withColumn("n_salts", F.coalesce(F.col("n_salts"), F.lit(1)))
-        .withColumn(
-            "salt",
-            F.when(F.col("n_salts") == 1, F.lit(0)).otherwise(
-                ((F.col("doc_id") - n_old) / range_per_salt).cast("int")
-            ),
-        )
-        .drop("n_salts")
-    )
+    # the build's pack -> (term, salt) -> encode pipeline over the batch's
+    # forward rows; head terms split by doc range within the batch
+    # (salt = (doc_id - n_old) // ceil(m / n_salts))
+    head_map = _head_terms(fwd_new, m, target_postings_per_salt)
+    packed = _pack_forward(
+        fwd_new, avgdl=avgdl, n_docs=m, head_map=head_map,
+        term_buckets=1, base=n_old,  # term_bucket is stamped by the merge
+    ).drop("term_bucket")
+    new_partials = _encode_packed(packed, block_size)
     shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    new_partials = salted.repartition(shuffle_n, "term", "salt").mapInPandas(
-        lambda it: _encode_partition(it, avgdl=avgdl, block_size=block_size),
-        schema=partial_schema,
-    )
     # merge the batch per term (one row per term per update — the new
     # GENERATION row) and stamp its term_bucket; existing rows of the
     # bucket are never read

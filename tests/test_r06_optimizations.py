@@ -263,7 +263,7 @@ def test_pack_forward_matches_exploded_salted(spark):
     """_pack_forward_arrow (forward nested rows, in-kernel salt +
     term_bucket) must produce the same (term, salt) groups and blobs
     as exploding + broadcast-salting + _pack_partition_arrow, and its
-    term_bucket must equal the JVM bucket_expr twin."""
+    term_bucket must equal _term_bucket_py."""
     from pyspark.sql import functions as F
 
     from job_searchengine_project_spark.corpus import generate_webpages
