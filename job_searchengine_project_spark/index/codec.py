@@ -15,7 +15,8 @@ Layout per term segment:
   the posting's first position absolute, in the same blocks;
 - per-block metadata: posting count, byte lengths of both blobs,
   last doc_id, and the block's max BM25 tf-norm (the block-max bound
-  WAND uses to skip blocks without decoding them).
+  the reference WAND kernel, search/wand.py, uses to skip blocks
+  without decoding them).
 
 Because every block starts with an *absolute* doc_id, segments from
 doc-range-disjoint partitions merge by pure concatenation — that is
@@ -109,6 +110,33 @@ class EncodedPostings:
     @property
     def has_positions(self) -> bool:
         return self.block_pos_bytes.size > 0
+
+
+def from_row(row) -> EncodedPostings:
+    """One segment or shard table row as ``EncodedPostings``: a mapping
+    (pyarrow ``to_pylist``) or a named tuple (pandas ``itertuples``).
+    A row without positional columns, or with empty ones, yields a
+    non-positional posting list."""
+    if not isinstance(row, dict):
+        row = row._asdict()
+    pos_bytes = row.get("block_pos_bytes")
+    return EncodedPostings(
+        count=int(row["df"]),
+        first_doc=int(row["first_doc"]),
+        doc_blob=bytes(row["doc_blob"]),
+        tf_blob=bytes(row["tf_blob"]),
+        block_n=np.asarray(row["block_n"], dtype=np.int32),
+        block_last_doc=np.asarray(row["block_last_doc"], dtype=np.int64),
+        block_doc_bytes=np.asarray(row["block_doc_bytes"], dtype=np.int32),
+        block_tf_bytes=np.asarray(row["block_tf_bytes"], dtype=np.int32),
+        block_max_tfnorm=np.asarray(row["block_max_tfnorm"], dtype=np.float64),
+        pos_blob=bytes(row.get("pos_blob") or b""),
+        block_pos_bytes=(
+            np.asarray(pos_bytes, dtype=np.int32)
+            if pos_bytes is not None and len(pos_bytes)
+            else None
+        ),
+    )
 
 
 def encode_postings(

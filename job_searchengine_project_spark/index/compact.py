@@ -4,8 +4,7 @@ Each ``update_index`` APPENDS a generation row per touched term
 (segment stacking — that is what makes updates O(batch)), so after G
 updates a term has up to G+1 rows, each with its own possibly
 underfilled trailing block: readers concatenate more parts, block
-metadata grows, block-max bounds lose selectivity, and WAND's deep
-skips shorten. Lucene solves this with background segment merges;
+metadata grows and block-max bounds lose selectivity. Lucene solves this with background segment merges;
 this is the batch equivalent.
 
 Trigger: a term is fragmented when it has more than one generation
@@ -43,27 +42,6 @@ from job_searchengine_project_spark.index.build import (
 from job_searchengine_project_spark.search.distributed import _load_norms_dense
 
 
-def _enc_from_tuple(r) -> codec.EncodedPostings:
-    return codec.EncodedPostings(
-        count=int(r.df),
-        first_doc=int(r.first_doc),
-        doc_blob=bytes(r.doc_blob),
-        tf_blob=bytes(r.tf_blob),
-        block_n=np.asarray(r.block_n, dtype=np.int32),
-        block_last_doc=np.asarray(r.block_last_doc, dtype=np.int64),
-        block_doc_bytes=np.asarray(r.block_doc_bytes, dtype=np.int32),
-        block_tf_bytes=np.asarray(r.block_tf_bytes, dtype=np.int32),
-        block_max_tfnorm=np.asarray(r.block_max_tfnorm, dtype=np.float64),
-        pos_blob=bytes(getattr(r, "pos_blob", b"") or b""),
-        block_pos_bytes=(
-            np.asarray(r.block_pos_bytes, dtype=np.int32)
-            if getattr(r, "block_pos_bytes", None) is not None
-            and len(r.block_pos_bytes)
-            else None
-        ),
-    )
-
-
 def _compact_partition(batches, *, block_size: int, avgdl: float,
                        index_dir: str, n_docs: int, with_pos: bool,
                        fingerprint: str = "", deleted=None):
@@ -91,7 +69,7 @@ def _compact_partition(batches, *, block_size: int, avgdl: float,
                 hi = int(tuples[-1].block_last_doc[-1])
                 j0, j1 = np.searchsorted(dele, [lo, hi + 1])
                 if j1 > j0:
-                    enc_in = _enc_from_tuple(tuples[0])
+                    enc_in = codec.from_row(tuples[0])
                     docs, tfs = codec.decode_postings(enc_in)
                     needs = bool(np.isin(dele[j0:j1], docs).any())
             if needs:
@@ -99,9 +77,9 @@ def _compact_partition(batches, *, block_size: int, avgdl: float,
                     dl = _load_norms_dense(index_dir, n_docs, fingerprint or None)
                 if enc_in is None:
                     enc_in = (
-                        _enc_from_tuple(tuples[0])
+                        codec.from_row(tuples[0])
                         if len(tuples) == 1
-                        else codec.concat_encoded([_enc_from_tuple(r) for r in tuples])
+                        else codec.concat_encoded([codec.from_row(r) for r in tuples])
                     )
                     docs, tfs = codec.decode_postings(enc_in)
                 pos = (

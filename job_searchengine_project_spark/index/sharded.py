@@ -1,4 +1,4 @@
-"""Doc-range-sharded segment layout + fully distributed WAND.
+"""Doc-range-sharded segment layout + fully distributed BM25 top-k.
 
 The term-merged layout (index/build.py) is the compact archival
 index; at 10^12 documents a single term's posting list no longer fits
@@ -18,10 +18,11 @@ derives the query-sharded layout from a built index:
 - query: the pushed-down term rows are repartitioned BY SHARD so every
   shard's rows are colocated in one task (a parquet scan alone does
   not guarantee this — Spark splits files larger than
-  spark.sql.files.maxPartitionBytes across input partitions, and WAND
-  over a subset of a shard's terms would emit partial per-doc scores
-  that the global top-k merge would NOT sum). Block-max WAND then runs
-  inside each shard, per-shard top-k rows come back, and the global
+  spark.sql.files.maxPartitionBytes across input partitions, and a
+  kernel over a subset of a shard's terms would emit partial per-doc
+  scores that the global top-k merge would NOT sum). The driver
+  engine's vectorized kernel then runs inside each shard, per-shard
+  top-k rows come back, and the global
   answer is orderBy(score,doc_id).limit(k) — top-k is associative,
   and a doc lives in exactly one shard so scores never split.
 
@@ -247,19 +248,15 @@ def _shard_dv_docs(
 
 
 class _ShardNorms:
-    """Absolute-doc_id view over a shard-local doclen array.
-
-    ``wand_topk`` indexes norms by global doc_id; a shard only stores
-    its own range [lo, lo+len) so this shifts on access."""
+    """A shard-local doclen array and its first doc_id: a shard only
+    stores its own range [lo, lo+len), so the doclens of global
+    doc_ids ``docs`` are ``arr[docs - lo]``."""
 
     __slots__ = ("arr", "lo")
 
     def __init__(self, arr: np.ndarray, lo: int):
         self.arr = arr
         self.lo = lo
-
-    def __getitem__(self, doc_id):
-        return self.arr[doc_id - self.lo]
 
 
 def _load_shard_norms(norms_root: str, shard: int, rng: int, n_docs: int) -> _ShardNorms:
@@ -322,18 +319,18 @@ def search_sharded_match_total(
     index_dir: str,
     query_terms: list[str],
     k: int,
-    strategy: str = "auto",
 ) -> tuple[list[tuple[int, float, str]], int]:
     """Fused match page + EXACT total in ONE Spark job (r6).
 
     query_sharded's plain-match path used to run the ranked kernel for
     the page and then a second full kernel pass (match_docs_sharded ->
     count) for the exact total — two corpus-scale jobs for one
-    request. Here each shard kernel emits its top-k rows AND one
-    sentinel row (doc_id = -1) carrying the shard's live match count
-    (distinct union of the terms' postings minus the shard's tombstone
-    slice — exactly match_docs_sharded's per-shard contribution; docs
-    live in one shard, so the counts sum). The driver merges the
+    request. Here each shard runs one accumulate and emits its top-k
+    rows AND one sentinel row (doc_id = -1) carrying the shard's live
+    match count (the accumulated doc set: the distinct union of the
+    terms' postings minus the shard's tombstone slice — exactly
+    match_docs_sharded's per-shard contribution; docs live in one
+    shard, so the counts sum). The driver merges the
     per-shard top-k lists with the same (score DESC, doc_id ASC)
     float order Spark's TakeOrdered used, sums the sentinels, and
     attaches urls with the pyarrow point read. Returned hits and
@@ -362,10 +359,9 @@ def search_sharded_match_total(
     def shard_topk_count(batches):
         from job_searchengine_project_spark.index import codec
         from job_searchengine_project_spark.search.engine import (
-            SearchEngine,
-            exhaustive_topk_arrays,
+            accumulate_arrays,
+            topk_pairs,
         )
-        from job_searchengine_project_spark.search.wand import TermCursor, wand_topk
 
         parts = list(batches)
         if not parts:
@@ -381,43 +377,22 @@ def search_sharded_match_total(
         for shard_val, grp in pdf_all.groupby("shard", sort=False):
             norms = _load_shard_norms(norms_root, int(shard_val), rng, n_docs)
             dele = _shard_tombstones(index_dir, int(shard_val), rng)
-            encs = {str(r.term): _enc_from_row(r) for r in grp.itertuples()}
-            term_arrays = {t: codec.decode_postings(e) for t, e in encs.items()}
-            all_docs = np.unique(
-                np.concatenate([d for d, _ in term_arrays.values()])
+            # one accumulate gives the shard's page AND its live match
+            # count (the accumulated doc set)
+            uniq, sums = accumulate_arrays(
+                {
+                    str(r.term): codec.decode_postings(codec.from_row(r))
+                    for r in grp.itertuples()
+                },
+                idf_of=idf_of,
+                dl_of=lambda docs: norms.arr[docs - norms.lo],
+                avgdl=avgdl,
+                k1=k1,
+                b=b,
+                deleted=dele,
             )
-            matched = int(
-                all_docs.size
-                if dele.size == 0
-                else np.isin(all_docs, dele, invert=True).sum()
-            )
-            strat = strategy
-            if strat == "auto":
-                total_p = sum(e.count for e in encs.values())
-                strat = (
-                    "exhaustive"
-                    if total_p > SearchEngine.DENSE_POSTINGS_CUTOFF
-                    else "wand"
-                )
-            if strat == "wand":
-                cursors = [
-                    TermCursor(term=t, enc=e, idf=idf_of(t))
-                    for t, e in encs.items()
-                ]
-                hits = wand_topk(
-                    cursors, norms, avgdl, k, k1=k1, b=b, deleted=dele
-                )
-            else:
-                hits = exhaustive_topk_arrays(
-                    term_arrays,
-                    idf_of=idf_of,
-                    dl_of=lambda docs: norms.arr[docs - norms.lo],
-                    avgdl=avgdl,
-                    k=k,
-                    k1=k1,
-                    b=b,
-                    deleted=dele,
-                )
+            hits = topk_pairs(uniq, sums, k)
+            matched = int(uniq.size)
             rows_d = [-1] + [int(d) for d, _ in hits]
             rows_s = [0.0] + [float(s) for _, s in hits]
             rows_m = [matched] + [0] * len(hits)
@@ -458,29 +433,6 @@ def _global_df_map(index_dir: str, terms: list[str]) -> dict[str, int]:
     for t, d in zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()):
         out[t] = out.get(t, 0) + int(d)
     return out
-
-
-def _enc_from_row(r) -> "codec.EncodedPostings":
-    from job_searchengine_project_spark.index import codec
-
-    return codec.EncodedPostings(
-        count=int(r.df),
-        first_doc=int(r.first_doc),
-        doc_blob=bytes(r.doc_blob),
-        tf_blob=bytes(r.tf_blob),
-        block_n=np.asarray(r.block_n, dtype=np.int32),
-        block_last_doc=np.asarray(r.block_last_doc, dtype=np.int64),
-        block_doc_bytes=np.asarray(r.block_doc_bytes, dtype=np.int32),
-        block_tf_bytes=np.asarray(r.block_tf_bytes, dtype=np.int32),
-        block_max_tfnorm=np.asarray(r.block_max_tfnorm, dtype=np.float64),
-        pos_blob=bytes(getattr(r, "pos_blob", b"") or b""),
-        block_pos_bytes=(
-            np.asarray(r.block_pos_bytes, dtype=np.int32)
-            if getattr(r, "block_pos_bytes", None) is not None
-            and len(r.block_pos_bytes)
-            else None
-        ),
-    )
 
 
 def search_sharded_phrase(
@@ -555,7 +507,7 @@ def search_sharded_phrase(
             decoded = {}
             max_pos = 0
             for t in uniq:
-                enc = _enc_from_row(by_term[t])
+                enc = codec.from_row(by_term[t])
                 if not enc.has_positions:
                     raise ValueError("sharded phrase requires a positional index")
                 docs, tfs = codec.decode_postings(enc)
@@ -724,7 +676,7 @@ def phrase_prefix_docs_sharded(
             max_pos = 0
             max_doc = 0
             for t, r in by_term.items():
-                enc = _enc_from_row(r)
+                enc = codec.from_row(r)
                 if not enc.has_positions:
                     raise ValueError(
                         "sharded phrase_prefix requires a positional index"
@@ -781,21 +733,15 @@ def search_sharded_batch(
     index_dir: str,
     queries: dict[str, list[str]],
     k: int = 10,
-    dense_cutoff: int | None = None,
 ) -> DataFrame:
     """Batch top-k: B queries answered in ONE pass over the sharded
     segments. The scan filters to the union of all query terms, each
-    shard's rows decode once per term, and every query runs WAND over
-    shared decoded state inside the shard — the per-query marginal cost
-    is the WAND loop, not the scan/shuffle. Returns
+    shard's rows decode once per term, and every query runs the
+    vectorized kernel (``exhaustive_topk_arrays``) over the shared
+    decoded arrays inside the shard — the per-query marginal cost is
+    one accumulate, not the scan/shuffle. Returns
     (query_id, doc_id, score, url) with per-query rank order, exactly
-    equal to running search_sharded per query (tested).
-
-    Each (query, shard) independently picks WAND or the vectorized
-    exhaustive kernel on its shard-local posting mass
-    (``dense_cutoff``, default the driver engine's
-    DENSE_POSTINGS_CUTOFF); decoded arrays memoize across the batch's
-    dense queries."""
+    equal to running search_sharded per query (tested)."""
     with open(os.path.join(index_dir, "stats.json")) as f:
         stats = json.load(f)
     n_docs = int(stats["n_docs"])
@@ -824,11 +770,7 @@ def search_sharded_batch(
 
     def shard_batch(batches):
         from job_searchengine_project_spark.index import codec
-        from job_searchengine_project_spark.search.engine import (
-            SearchEngine,
-            exhaustive_topk_arrays,
-        )
-        from job_searchengine_project_spark.search.wand import TermCursor, wand_topk
+        from job_searchengine_project_spark.search.engine import exhaustive_topk_arrays
 
         parts = list(batches)
         if not parts:
@@ -838,52 +780,34 @@ def search_sharded_batch(
             return
         dfm = bc_df.value
         qts = bc_q.value
-        cutoff = (
-            dense_cutoff
-            if dense_cutoff is not None
-            else SearchEngine.DENSE_POSTINGS_CUTOFF
-        )
 
         def idf_of(t):
             return float(np.log1p((n_eff - dfm[t] + 0.5) / (dfm[t] + 0.5)))
 
         for shard_val, grp in pdf_all.groupby("shard", sort=False):
-            by_term = {str(r.term): r for r in grp.itertuples()}
             norms = _load_shard_norms(norms_root, int(shard_val), rng, n_docs)
             dele = _shard_tombstones(index_dir, int(shard_val), rng)
-            # decode-once state shared across the batch: EncodedPostings
-            # are immutable; each query gets fresh (cheap) cursors, and
-            # the dense path's decoded arrays memoize across queries
-            encs = {t: _enc_from_row(r) for t, r in by_term.items()}
-            dec: dict[str, tuple] = {}
+            # every scanned term belongs to some query: decode each
+            # once and share the arrays across the batch
+            dec = {
+                str(r.term): codec.decode_postings(codec.from_row(r))
+                for r in grp.itertuples()
+            }
             out_q, out_d, out_s = [], [], []
             for qid, terms in qts.items():
-                present = [t for t in terms if t in encs]
+                present = [t for t in terms if t in dec]
                 if not present:
                     continue
-                # per-(query, shard) strategy choice, like search_sharded
-                if sum(encs[t].count for t in present) > cutoff:
-                    for t in present:
-                        if t not in dec:
-                            dec[t] = codec.decode_postings(encs[t])
-                    hits = exhaustive_topk_arrays(
-                        {t: dec[t] for t in present},
-                        idf_of=idf_of,
-                        dl_of=lambda docs: norms.arr[docs - norms.lo],
-                        avgdl=avgdl,
-                        k=k,
-                        k1=k1,
-                        b=b,
-                        deleted=dele,
-                    )
-                else:
-                    cursors = [
-                        TermCursor(term=t, enc=encs[t], idf=idf_of(t))
-                        for t in present
-                    ]
-                    hits = wand_topk(
-                        cursors, norms, avgdl, k, k1=k1, b=b, deleted=dele
-                    )
+                hits = exhaustive_topk_arrays(
+                    {t: dec[t] for t in present},
+                    idf_of=idf_of,
+                    dl_of=lambda docs: norms.arr[docs - norms.lo],
+                    avgdl=avgdl,
+                    k=k,
+                    k1=k1,
+                    b=b,
+                    deleted=dele,
+                )
                 for d, s in hits:
                     out_q.append(qid)
                     out_d.append(d)
@@ -1086,7 +1010,7 @@ def search_sharded_bool(
             dele = _shard_tombstones(index_dir, int(shard_val), rng)
             decoded = {}
             for r in grp.itertuples():
-                docs, tfs = codec.decode_postings(_enc_from_row(r))
+                docs, tfs = codec.decode_postings(codec.from_row(r))
                 if dele.size:
                     live = ~np.isin(docs, dele)
                     docs, tfs = docs[live], tfs[live]
@@ -1188,7 +1112,7 @@ def match_docs_sharded(
 
         for pdf in batches:
             for r in pdf.itertuples():
-                docs, _ = codec.decode_postings(_enc_from_row(r))
+                docs, _ = codec.decode_postings(codec.from_row(r))
                 yield pd.DataFrame({"doc_id": docs})
 
     hits = seg.mapInPandas(decode_docs, schema="doc_id long")
@@ -1497,24 +1421,19 @@ def search_sharded(
     query_terms: list[str],
     k: int = 10,
     with_fields: bool = False,
-    strategy: str = "auto",
     search_after: tuple[float, int] | None = None,
 ) -> DataFrame:
     """Distributed top-k: per-shard kernels in executors, associative
     global merge. Returns (doc_id, score, url) ranked.
 
-    ``strategy`` mirrors the driver engine: each shard independently
-    picks block-max WAND for selective profiles and the vectorized
-    exhaustive kernel (search/engine.py exhaustive_topk_arrays — same
-    float order, exact) when its candidate postings exceed the
-    DENSE_POSTINGS_CUTOFF — head-term queries would otherwise pay the
-    document-at-a-time Python loop in EVERY shard. Both kernels are
-    exact, so mixed per-shard choices merge correctly.
+    Each shard runs the driver engine's vectorized kernel
+    (search/engine.py ``exhaustive_topk_arrays``: same float order,
+    exact) over its own decoded postings, so sharded and driver
+    answers are identical.
 
     ``search_after``: the ES cursor form distributed — every shard
-    applies the (score, doc_id) cursor mask inside its exhaustive
-    kernel (the cursor path always runs that kernel, like the driver
-    engine) and returns its top-k AFTER the cursor; the global merge
+    applies the (score, doc_id) cursor mask inside that kernel and
+    returns its top-k AFTER the cursor; the global merge
     stays the same associative top-k. Deep pagination therefore costs
     each shard O(its candidates) per page with no from+size depth
     term — the property that lets a 1000-node cluster serve page
@@ -1544,11 +1463,7 @@ def search_sharded(
 
     def shard_topk(batches):
         from job_searchengine_project_spark.index import codec
-        from job_searchengine_project_spark.search.engine import (
-            SearchEngine,
-            exhaustive_topk_arrays,
-        )
-        from job_searchengine_project_spark.search.wand import TermCursor, wand_topk
+        from job_searchengine_project_spark.search.engine import exhaustive_topk_arrays
 
         parts = list(batches)
         if not parts:
@@ -1564,49 +1479,27 @@ def search_sharded(
         for shard_val, grp in pdf_all.groupby("shard", sort=False):
             norms = _load_shard_norms(norms_root, int(shard_val), rng, n_docs)
             dele = _shard_tombstones(index_dir, int(shard_val), rng)
-            encs = {str(r.term): _enc_from_row(r) for r in grp.itertuples()}
-            strat = strategy
-            if search_after is not None:
-                strat = "exhaustive"  # cursor mask lives in that kernel
-            elif strat == "auto":
-                # per-shard choice on the SHARD-LOCAL posting mass —
-                # same trade the driver engine makes globally
-                total = sum(e.count for e in encs.values())
-                strat = (
-                    "exhaustive"
-                    if total > SearchEngine.DENSE_POSTINGS_CUTOFF
-                    else "wand"
-                )
-            if strat == "wand":
-                cursors = [
-                    TermCursor(term=t, enc=e, idf=idf_of(t))
-                    for t, e in encs.items()
-                ]
-                hits = wand_topk(
-                    cursors, norms, avgdl, k, k1=k1, b=b, deleted=dele
-                )
-            else:
-                term_arrays = {
-                    t: codec.decode_postings(e) for t, e in encs.items()
-                }
-                hits = exhaustive_topk_arrays(
-                    term_arrays,
-                    idf_of=idf_of,
-                    dl_of=lambda docs: norms.arr[docs - norms.lo],
-                    avgdl=avgdl,
-                    k=k,
-                    k1=k1,
-                    b=b,
-                    deleted=dele,
-                    after=search_after,
-                )
+            hits = exhaustive_topk_arrays(
+                {
+                    str(r.term): codec.decode_postings(codec.from_row(r))
+                    for r in grp.itertuples()
+                },
+                idf_of=idf_of,
+                dl_of=lambda docs: norms.arr[docs - norms.lo],
+                avgdl=avgdl,
+                k=k,
+                k1=k1,
+                b=b,
+                deleted=dele,
+                after=search_after,
+            )
             if hits:
                 docs_out, scores_out = zip(*hits)
                 yield pd.DataFrame({"doc_id": docs_out, "score": scores_out})
 
     # colocate every shard's rows in one task: a file split (files larger
-    # than maxPartitionBytes) would otherwise hand WAND a subset of the
-    # query terms and the global top-k would merge partial scores.
+    # than maxPartitionBytes) would otherwise hand the kernel a subset of
+    # the query terms and the global top-k would merge partial scores.
     shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     partials = seg.repartition(shuffle_n, "shard").mapInPandas(
         shard_topk, schema="doc_id long, score double"

@@ -48,7 +48,6 @@ from job_searchengine_project_spark.index.sharded import (
     NORMS_DIR,
     _attach_urls_pruned,
     _clamp_k,
-    _enc_from_row,
     _global_df_map,
     _load_meta,
     _load_shard_norms,
@@ -251,7 +250,7 @@ def search_sharded_multi(
                 )
                 dele = _shard_tombstones(sub_dirs[field], shard, rng)
                 arrays = {
-                    str(r.term): codec.decode_postings(_enc_from_row(r))
+                    str(r.term): codec.decode_postings(codec.from_row(r))
                     for r in rows.itertuples()
                 }
                 uniq, sums = accumulate_arrays(
@@ -442,7 +441,7 @@ def search_sharded_bool_fielded(
                 )
                 dele = _shard_tombstones(sub_dirs[field], shard, rng)
                 for r in fgrp.itertuples():
-                    docs, tfs = codec.decode_postings(_enc_from_row(r))
+                    docs, tfs = codec.decode_postings(codec.from_row(r))
                     if dele.size:
                         live = ~np.isin(docs, dele)
                         docs, tfs = docs[live], tfs[live]

@@ -12,7 +12,8 @@ analog over the segment-stacked layout:
   (covered by the update pending-manifest, so a crashed replace rolls
   its tombstones back with everything else);
 - every query path drops tombstoned docs at scoring time
-  (WAND skips the pivot, the vectorized kernels mask) — results never
+  (the vectorized kernels mask, the reference WAND kernel skips the
+  pivot) — results never
   contain a deleted/stale doc;
 - **scoring contract (Lucene/ES parity, documented + oracle-checked)**:
   until a purging compaction runs, tombstoned docs STILL count in df

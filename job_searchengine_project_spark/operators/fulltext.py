@@ -1173,7 +1173,7 @@ def search_after_top10(spark, sf_dir: str) -> DataFrame:
     pages 1+2 concatenated so the oracle is the plain top-2K — page 2
     rows prove the cursor tiles exactly."""
     eng = _engine_for(spark, sf_dir)
-    p1 = eng.search(QUERY_TERMS, k=K, strategy="exhaustive", with_urls=False)
+    p1 = eng.search(QUERY_TERMS, k=K, with_urls=False)
     cursor = (p1[-1].score, p1[-1].doc_id)
     p2 = eng.search(QUERY_TERMS, k=K, search_after=cursor, with_urls=False)
     hits = p1 + p2

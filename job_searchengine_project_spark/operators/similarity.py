@@ -186,6 +186,10 @@ def ann_cosine_topk(spark, sf_dir: str) -> DataFrame:
         filter=pads.field("vec_id") < N_QUERY,
     )
     qrows = sorted(zip(qtbl["vec_id"].to_pylist(), qtbl["embedding"].to_pylist()))
+    if not qrows:  # no query vectors: no (query, neighbor) rows
+        return spark.createDataFrame(
+            [], "query_id long, neighbor_id long, cos double, rank int"
+        )
     qids = [int(i) for i, _ in qrows]
     qmat = np.array([v for _, v in qrows], dtype=np.float64)
     nq = np.sqrt(_fold_dot_np(qmat, qmat))
@@ -664,6 +668,12 @@ def _ivf_assign(emb: DataFrame, centroids: DataFrame, rank_n: int, out: str) -> 
         (int(r["centroid_id"]), [float(x) for x in r["cv"]])
         for r in centroids.collect()
     )
+    if not crows:  # an empty codebook assigns no vector
+        return emb.select(
+            F.col("vec_id").alias(out),
+            F.lit(None).cast("long").alias("centroid_id"),
+            F.lit(None).cast("int").alias("crank"),
+        ).limit(0)
     cids = [c for c, _ in crows]
     cmat = np.array([v for _, v in crows], dtype=np.float64)
     cnorm = np.sqrt(_fold_dot_np(cmat, cmat))

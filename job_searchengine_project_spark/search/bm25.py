@@ -14,13 +14,13 @@ Lucene's lossy 1-byte norm encoding.)
 Multi-term queries use ES ``match`` OR semantics (README.md:67-71):
 a doc matches if it contains any query term; scores sum over matched
 terms. Tie-break is ascending doc_id — a total order, applied
-identically in the WAND engine.
+identically in the query engine.
 
 The oracle is pure built-in Spark (explode / filter / broadcast join /
 sorted aggregate / orderBy-limit) — it IS the rank-parity gate for the
-compressed-segment WAND path. Float determinism: per-doc term partial
+compressed-segment query path. Float determinism: per-doc term partial
 scores are summed in sorted-term order via ``F.aggregate`` over a
-``sort_array``'d collect_list, so oracle and WAND add in the same
+``sort_array``'d collect_list, so oracle and engine add in the same
 order and scores compare exactly (1e-9 gate in tests).
 """
 

@@ -447,10 +447,7 @@ def match_counts_sharded_batch(
     scans."""
     import pandas as pd
 
-    from job_searchengine_project_spark.index.sharded import (
-        _enc_from_row,
-        _load_meta,
-    )
+    from job_searchengine_project_spark.index.sharded import _load_meta
 
     with open(os.path.join(index_dir, "stats.json")) as f:
         _load_meta(index_dir, json.load(f))  # refuse stale shards
@@ -471,7 +468,7 @@ def match_counts_sharded_batch(
 
         for pdf in batches:
             for r in pdf.itertuples():
-                docs, _ = codec.decode_postings(_enc_from_row(r))
+                docs, _ = codec.decode_postings(codec.from_row(r))
                 for qid in bc.value.get(str(r.term), ()):
                     yield pd.DataFrame({"query_id": qid, "doc_id": docs})
 
@@ -810,7 +807,7 @@ def query_sharded(
         ranked = search_sharded(
             spark, target, terms,
             k=size if after is not None else frm + size,
-            strategy="exhaustive", search_after=after,
+            search_after=after,
         )
         scope = match_docs_sharded(spark, target, terms)
         page = ranked.collect()

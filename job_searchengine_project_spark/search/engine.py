@@ -1,4 +1,4 @@
-"""Query engine: term lookup -> segment load -> block-max WAND top-k.
+"""Query engine: term lookup -> segment load -> vectorized BM25 top-k.
 
 Read path is keyed parquet point reads (``iolayout.ParquetSnapshot``):
 the segments table is partitioned by ``term_bucket`` (directory
@@ -30,7 +30,6 @@ from job_searchengine_project_spark.index import codec
 from job_searchengine_project_spark.index.build import _term_bucket_py
 from job_searchengine_project_spark.iolayout import ParquetSnapshot
 from job_searchengine_project_spark.search.stored import newest_stored_rows
-from job_searchengine_project_spark.search.wand import TermCursor, wand_topk
 
 
 def dv_filter_expr(
@@ -151,8 +150,8 @@ def exhaustive_topk_arrays(
     after: tuple[float, int] | None = None,
 ) -> list[tuple[int, float]]:
     """Vectorized term-at-a-time OR scoring over decoded posting
-    arrays (exact, oracle sum order) — the shared kernel behind the
-    driver engine's exhaustive strategy AND the per-shard dense path
+    arrays (exact, oracle sum order) — the one match-OR top-k kernel
+    of the driver engine and of every per-shard match site
     (index/sharded.py): ``term_arrays`` maps term -> (docs, tfs),
     ``idf_of(term)`` supplies idf (engine-local or global-df), and
     ``dl_of(docs)`` resolves doclens (dense driver array or
@@ -182,10 +181,8 @@ def topk_pairs(
         # search_after cursor (ES deep-pagination): keep only docs
         # STRICTLY after (score desc, doc_id asc) the cursor — one
         # vectorized mask, O(candidates) memory per page instead of the
-        # O(from + size) heap from/size pays. Exact when the cursor's
-        # floats come from this kernel (the search_after path always
-        # does); a cursor from the WAND kernel can differ by 1 ulp on
-        # ties (documented cross-kernel bound).
+        # O(from + size) heap from/size pays. Exact because every
+        # match-OR page, the cursor's included, comes from this kernel.
         s_a, d_a = float(after[0]), int(after[1])
         keep = (sums < s_a) | ((sums == s_a) & (uniq > d_a))
         uniq, sums = uniq[keep], sums[keep]
@@ -277,10 +274,10 @@ class SearchEngine:
 
     @property
     def doclens(self) -> np.ndarray:
-        # the ONE full forward read the engine keeps: WAND needs the
-        # norm of every scored doc, so the dense doclen array is the
-        # driver engine's working set (8 B/doc; the distributed paths
-        # hold it shard-local instead)
+        # the ONE full forward read the engine keeps: the kernel needs
+        # the norm of every scored doc, so the dense doclen array is
+        # the driver engine's working set (8 B/doc; the distributed
+        # paths hold it shard-local instead)
         if self._doclens is None:
             t = self._snapshot("forward").read(["doc_id", "doclen"])
             arr = np.zeros(self.n_docs, dtype=np.float64)
@@ -403,28 +400,9 @@ class SearchEngine:
             values=terms,
             parts={_term_bucket_py(t, self.term_buckets) for t in terms},
         )
-        has_pos = "pos_blob" in tbl.column_names
         parts: dict[str, list[codec.EncodedPostings]] = {}
         for row in tbl.to_pylist():
-            parts.setdefault(row["term"], []).append(
-                codec.EncodedPostings(
-                    count=int(row["df"]),
-                    first_doc=int(row["first_doc"]),
-                    doc_blob=row["doc_blob"],
-                    tf_blob=row["tf_blob"],
-                    block_n=np.asarray(row["block_n"], dtype=np.int32),
-                    block_last_doc=np.asarray(row["block_last_doc"], dtype=np.int64),
-                    block_doc_bytes=np.asarray(row["block_doc_bytes"], dtype=np.int32),
-                    block_tf_bytes=np.asarray(row["block_tf_bytes"], dtype=np.int32),
-                    block_max_tfnorm=np.asarray(row["block_max_tfnorm"], dtype=np.float64),
-                    pos_blob=row.get("pos_blob") or b"" if has_pos else b"",
-                    block_pos_bytes=(
-                        np.asarray(row["block_pos_bytes"], dtype=np.int32)
-                        if has_pos and row.get("block_pos_bytes")
-                        else None
-                    ),
-                )
-            )
+            parts.setdefault(row["term"], []).append(codec.from_row(row))
         return {
             t: ps[0]
             if len(ps) == 1
@@ -437,10 +415,9 @@ class SearchEngine:
     def _idf(self, df: int) -> float:
         return float(np.log1p((self.n_eff - df + 0.5) / (df + 0.5)))
 
-    # above this many candidate postings per *selective* profile, the
-    # document-at-a-time Python WAND loop loses to one vectorized
-    # numpy pass (same trade Lucene makes between BlockMaxWAND and
-    # exhaustive bulk scorers)
+    # read only by perfbench's ``engine.dense_share`` probe: no query
+    # path routes on it (every match-OR top-k runs the vectorized
+    # kernel). Goes when that probe does.
     DENSE_POSTINGS_CUTOFF = 50_000
 
     def search(
@@ -453,26 +430,31 @@ class SearchEngine:
         offset: int = 0,
         search_after: tuple[float, int] | None = None,
     ) -> list[SearchHit]:
-        """BM25 top-k (ES match-OR semantics). Exact under every
-        strategy; `auto` picks block-max WAND for selective queries and
-        the vectorized term-at-a-time kernel for stopword-dense ones.
+        """BM25 top-k (ES match-OR semantics), exact: one vectorized
+        term-at-a-time accumulate over the decoded postings, then
+        ``topk_pairs``. ``strategy`` is ``"auto"``/``"exhaustive"``
+        (that kernel) or ``"wand"``, which runs the reference block-max
+        WAND kernel (``search/wand.py``) for kernel comparisons; no
+        query path asks for it.
 
-        ``offset``/``k`` are ES `from`/`size`: the kernels compute the
+        ``offset``/``k`` are ES `from`/`size`: the kernel selects the
         top (offset + k) and the first ``offset`` rows are dropped —
         deep pagination costs what it costs in ES/Lucene for the same
         reason (rank ``offset + k`` must be proven before anything
         after it is correct). ES caps from+size (10k default) exactly
         because of that cost; ``search_after`` is the scale-safe
         cursor form: pass the LAST hit's (score, doc_id) and the next
-        page costs O(candidates) with no depth term. The cursor path
-        always runs the vectorized exact kernel (a cursor needs every
-        candidate's score anyway); for exact page tiling fetch page 1
-        with strategy="exhaustive" too (a WAND-produced cursor can
-        differ by 1 ulp on exact ties — documented kernel bound)."""
+        page costs O(candidates) with no depth term. Pages tile
+        exactly because every page comes from the same kernel."""
         if search_after is not None and offset:
             raise ValueError("search_after and offset are exclusive")
+        if strategy not in ("auto", "exhaustive", "wand"):
+            raise ValueError(f"unknown strategy: {strategy}")
         depth = k + max(0, offset)
-        hits, _ = self._ranked(query_terms, depth, strategy, after=search_after)
+        if strategy == "wand" and search_after is None:
+            hits = self._wand(query_terms, depth)
+        else:
+            hits, _ = self._ranked(query_terms, depth, after=search_after)
         hits = hits[offset : offset + k] if offset > 0 else hits
         return self._attach(
             [SearchHit(doc_id=d, score=s) for d, s in hits], with_urls, with_fields
@@ -482,38 +464,34 @@ class SearchEngine:
         self,
         query_terms: list[str],
         depth: int,
-        strategy: str = "auto",
         after: tuple[float, int] | None = None,
-        count: bool = False,
     ) -> tuple[list[tuple[int, float]], int]:
-        """One match-OR evaluation: a single segment read, the strategy
-        router, one kernel call for the top ``depth`` (doc_id, score)
-        — and, with ``count``, the exact live match total taken from
-        the same segments (the exhaustive kernel's accumulated doc set,
-        or the decoded doc-id union beside WAND). The total is 0 when
-        not counted."""
+        """One match-OR evaluation: a single segment read and one
+        accumulate give the top ``depth`` (doc_id, score) AND the
+        exact live match total (the accumulated doc set's size) — the
+        postings are decoded and scored once."""
         segs = self.load_segments(query_terms)
         if not segs:
             return [], 0
-        if after is not None:
-            strategy = "exhaustive"  # a cursor needs every candidate's score
-        elif strategy == "auto":
-            total = sum(s.count for s in segs.values())
-            strategy = "exhaustive" if total > self.DENSE_POSTINGS_CUTOFF else "wand"
-        if strategy == "exhaustive":
-            uniq, sums = self._accumulate(segs)
-            return topk_pairs(uniq, sums, depth, after), int(uniq.size)
-        if strategy != "wand":
-            raise ValueError(f"unknown strategy: {strategy}")
+        uniq, sums = self._accumulate(segs)
+        return topk_pairs(uniq, sums, depth, after), int(uniq.size)
+
+    def _wand(self, query_terms: list[str], depth: int) -> list[tuple[int, float]]:
+        """The reference block-max WAND kernel on this engine's
+        segments, norms and tombstones (``search(strategy="wand")``)."""
+        from job_searchengine_project_spark.search.wand import TermCursor, wand_topk
+
+        segs = self.load_segments(query_terms)
+        if not segs:
+            return []
         cursors = [
             TermCursor(term=t, enc=enc, idf=self._idf(enc.count))
             for t, enc in sorted(segs.items())
         ]
-        hits = wand_topk(
+        return wand_topk(
             cursors, self.doclens, self.avgdl, depth, k1=BM25_K1, b=BM25_B,
             deleted=self.tombstones,
         )
-        return hits, int(self._live_docs(segs).size) if count else 0
 
     def _attach(
         self, hits: list[SearchHit], with_urls: bool = True, with_fields: bool = False
@@ -1358,7 +1336,7 @@ class SearchEngine:
                     terms = self.fuzzy_expand(term, max_edits=int(fuzz))
                 # one segment read and one kernel call give the page
                 # AND the exact total, from the same loaded postings
-                pairs, total = self._ranked(terms, size + max(0, frm), count=True)
+                pairs, total = self._ranked(terms, size + max(0, frm))
                 pairs = pairs[frm : frm + size] if frm > 0 else pairs
                 hits = [SearchHit(doc_id=d, score=s) for d, s in pairs]
             elif kind == "match_phrase":

@@ -1,4 +1,12 @@
-"""Block-max WAND top-k over compressed posting segments.
+"""Block-max WAND top-k over compressed posting segments: a reference
+kernel that no query path calls.
+
+Every match-OR top-k — the driver engine and each shard — runs the
+vectorized accumulate + select kernel (search/engine.py
+``accumulate_arrays``/``topk_pairs``), which beats this Python
+document-at-a-time loop on the same segments. This module stays for
+kernel comparisons: tests, ``SearchEngine.search(strategy="wand")``
+and the benchmarks' per-strategy probes.
 
 Document-at-a-time disjunctive (match-OR) top-k with two pruning
 levels:
@@ -15,15 +23,10 @@ levels:
 Exactness: all bounds are true upper bounds computed with the same
 float64 formula as real scores; the threshold comparison keeps a
 1e-9 slack so rounding can never cause a false skip — the engine may
-score a few extra docs, never miss one. Results are therefore
-*identical* (doc ids and scores) to exhaustive scoring, with
-ascending-doc_id tie-break. Heap ordering matches the oracle's
-(desc score, asc doc_id).
-
-Scale note: this kernel is per-shard; the distributed query path runs
-it inside each doc-range shard and merges per-shard top-k (top-k is
-associative). Locally it runs on the driver over pushed-down segment
-reads.
+score a few extra docs, never miss one. Results therefore rank like
+the vectorized kernel (ascending-doc_id tie-break, heap ordering
+(desc score, asc doc_id)); scores agree to 1e-9 but not bitwise,
+because the float operations group differently.
 """
 
 from __future__ import annotations

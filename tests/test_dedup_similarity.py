@@ -157,3 +157,34 @@ def test_embedding_cc_chain_propagation(spark, tmp_path):
         for r in embedding_dup_clusters(spark, sf).collect()
     ]
     assert got == [(0, 0), (1, 0), (2, 0), (3, 0), (4, 4)]
+
+
+def _embeddings_without_query_rows(spark, tmp_path) -> str:
+    """An embeddings file whose every vec_id is past both the query
+    range (vec_id < N_QUERY) and the codebook sample (vec_id < nlist)."""
+    sf = str(tmp_path / "sf")
+    rows = [(100 + i, [float(i + 1), 1.0]) for i in range(4)]
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>"
+    ).write.parquet(f"{sf}/embeddings.parquet")
+    return sf
+
+
+def test_ann_cosine_topk_without_query_rows_is_empty(spark, tmp_path):
+    from job_searchengine_project_spark.operators.similarity import ann_cosine_topk
+
+    out = ann_cosine_topk(spark, _embeddings_without_query_rows(spark, tmp_path))
+    assert out.columns == ["query_id", "neighbor_id", "cos", "rank"]
+    assert out.collect() == []
+
+
+def test_ivf_assign_with_no_centroid_rows_is_empty(spark, tmp_path):
+    from job_searchengine_project_spark.operators import similarity as sim
+
+    sf = _embeddings_without_query_rows(spark, tmp_path)
+    emb = spark.read.parquet(f"{sf}/embeddings.parquet").select("vec_id", "embedding")
+    cent = sim._kmeans_codebook(emb)  # its vec_id < nlist sample is empty
+    assert cent.collect() == []
+    got = sim._ivf_assign(emb, cent, 1, "vec_id")
+    assert got.columns == ["vec_id", "centroid_id", "crank"]
+    assert got.collect() == []

@@ -73,14 +73,11 @@ def test_match_total_equals_accumulated_doc_set(two_gen):
     terms = eng._analyze(text)
     want = len(eng.accumulate_scores(terms))
     assert want > 10
-    # cutoff 0 makes every body dense: the exhaustive kernel, which
-    # count() used to call with k=0 and crash on
-    for cutoff in (SearchEngine.DENSE_POSTINGS_CUTOFF, 0):
-        eng.DENSE_POSTINGS_CUTOFF = cutoff
-        resp = eng.query(_match(text, frm=3))
-        assert resp["hits"]["total"]["value"] == want
-        assert eng.count(_match(text)) == {"count": want}
-        assert deleted not in {h["_id"] for h in resp["hits"]["hits"]}
+    resp = eng.query(_match(text, frm=3))
+    assert resp["hits"]["total"]["value"] == want
+    # count() runs the kernel with k=0, which once crashed it
+    assert eng.count(_match(text)) == {"count": want}
+    assert deleted not in {h["_id"] for h in resp["hits"]["hits"]}
 
 
 def test_match_body_reads_segments_once_without_spark_jobs(spark, two_gen):

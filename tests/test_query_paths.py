@@ -76,8 +76,10 @@ def test_distributed_search_absent_term(spark, morph_index):
 
 
 def test_sharded_distributed_wand_matches_driver(spark, morph_index):
-    """Doc-range-sharded layout: per-shard executor-side WAND + global
-    top-k merge is rank- and score-identical to the driver engine."""
+    """Doc-range-sharded layout: the per-shard executor-side kernel +
+    global top-k merge is rank- and score-identical to the driver
+    engine (the same kernel and float order), and ranks like the
+    reference WAND kernel within 1e-9."""
     from job_searchengine_project_spark.index.sharded import (
         build_sharded_segments,
         search_sharded,
@@ -96,16 +98,16 @@ def test_sharded_distributed_wand_matches_driver(spark, morph_index):
     assert sorted(norms_dirs) == sorted(shard_dirs)
 
     eng = SearchEngine(morph_index)
-    for strat in ("wand", "exhaustive"):  # both per-shard kernels exact
-        for q in (["spark"], ["spark", "데이터엔지니어", "개발자"], ["zzz_nope"]):
-            driver_hits = eng.search(q, k=10, with_urls=True, strategy="wand")
-            dist = search_sharded(
-                spark, morph_index, q, k=10, strategy=strat
-            ).collect()
-            assert [r["doc_id"] for r in dist] == [h.doc_id for h in driver_hits], (strat, q)
-            assert [r["url"] for r in dist] == [h.url for h in driver_hits], (strat, q)
-            for r, h in zip(dist, driver_hits):
-                assert abs(r["score"] - h.score) < 1e-9
+    for q in (["spark"], ["spark", "데이터엔지니어", "개발자"], ["zzz_nope"]):
+        driver_hits = eng.search(q, k=10, with_urls=True)
+        wand_hits = eng.search(q, k=10, with_urls=False, strategy="wand")
+        dist = search_sharded(spark, morph_index, q, k=10).collect()
+        assert [(r["doc_id"], r["url"], r["score"]) for r in dist] == [
+            (h.doc_id, h.url, h.score) for h in driver_hits
+        ], q
+        assert [r["doc_id"] for r in dist] == [h.doc_id for h in wand_hits], q
+        for r, h in zip(dist, wand_hits):
+            assert abs(r["score"] - h.score) < 1e-9
 
 
 def test_sharded_search_survives_file_splits(spark, morph_index):
@@ -282,27 +284,17 @@ def test_sharded_batch_matches_per_query(spark, morph_index):
         "q_multi": ["spark", "데이터엔지니어", "개발자"],
         "q_absent": ["zzz_nope"],
     }
-    # dense_cutoff=0 forces every (query, shard) onto the vectorized
-    # exhaustive kernel; default leaves them on WAND. Each is compared
-    # against the single-query path running the SAME kernel (WAND and
-    # exhaustive agree to 1e-9 but not bitwise — operation grouping
-    # differs — and that cross-kernel tolerance is asserted by the
-    # engine parity suite, not here).
-    for cutoff, strat in ((None, "wand"), (0, "exhaustive")):
-        batch = search_sharded_batch(
-            spark, morph_index, queries, k=7, dense_cutoff=cutoff
-        ).collect()
-        got = {}
-        for r in batch:
-            got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"], r["url"]))
-        for qid, terms in queries.items():
-            single = [
-                (r["doc_id"], r["score"], r["url"])
-                for r in search_sharded(
-                    spark, morph_index, terms, k=7, strategy=strat
-                ).collect()
-            ]
-            assert got.get(qid, []) == single, (cutoff, qid)
+    # both run the same per-shard kernel, so rows match bitwise
+    batch = search_sharded_batch(spark, morph_index, queries, k=7).collect()
+    got = {}
+    for r in batch:
+        got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"], r["url"]))
+    for qid, terms in queries.items():
+        single = [
+            (r["doc_id"], r["score"], r["url"])
+            for r in search_sharded(spark, morph_index, terms, k=7).collect()
+        ]
+        assert got.get(qid, []) == single, qid
 
 
 def test_shards_freshness_gate(spark, webpages_small, tmp_path):
