@@ -247,21 +247,11 @@ def _shard_dv_docs(
     return set(ids.tolist())
 
 
-class _ShardNorms:
-    """A shard-local doclen array and its first doc_id: a shard only
-    stores its own range [lo, lo+len), so the doclens of global
-    doc_ids ``docs`` are ``arr[docs - lo]``."""
-
-    __slots__ = ("arr", "lo")
-
-    def __init__(self, arr: np.ndarray, lo: int):
-        self.arr = arr
-        self.lo = lo
-
-
-def _load_shard_norms(norms_root: str, shard: int, rng: int, n_docs: int) -> _ShardNorms:
+def _load_shard_norms(norms_root: str, shard: int, rng: int, n_docs: int):
     """Executor-side: read ONE shard's norms parquet into a dense local
-    array (size = that shard's doc range, never n_docs)."""
+    array (size = that shard's doc range [lo, lo+rng), never n_docs)
+    and return ``dl_of(docs)``, the doclens of global doc_ids ``docs``
+    in that range — the kernels' ``dl_of`` argument."""
     import pyarrow.dataset as pads
 
     lo = shard * rng
@@ -272,7 +262,11 @@ def _load_shard_norms(norms_root: str, shard: int, rng: int, n_docs: int) -> _Sh
     arr = np.zeros(max(hi - lo, 1), dtype=np.float64)
     d = tbl.column("doc_id").to_numpy()
     arr[d - lo] = tbl.column("doclen").to_numpy().astype(np.float64)
-    return _ShardNorms(arr, lo)
+
+    def dl_of(docs: np.ndarray) -> np.ndarray:
+        return arr[docs - lo]
+
+    return dl_of
 
 
 def _attach_urls_pruned(spark: SparkSession, index_dir: str, top: DataFrame) -> DataFrame:
@@ -375,7 +369,7 @@ def search_sharded_match_total(
             return float(np.log1p((n_eff - dfm[t] + 0.5) / (dfm[t] + 0.5)))
 
         for shard_val, grp in pdf_all.groupby("shard", sort=False):
-            norms = _load_shard_norms(norms_root, int(shard_val), rng, n_docs)
+            dl_of = _load_shard_norms(norms_root, int(shard_val), rng, n_docs)
             dele = _shard_tombstones(index_dir, int(shard_val), rng)
             # one accumulate gives the shard's page AND its live match
             # count (the accumulated doc set)
@@ -385,7 +379,7 @@ def search_sharded_match_total(
                     for r in grp.itertuples()
                 },
                 idf_of=idf_of,
-                dl_of=lambda docs: norms.arr[docs - norms.lo],
+                dl_of=dl_of,
                 avgdl=avgdl,
                 k1=k1,
                 b=b,
@@ -577,7 +571,7 @@ def search_sharded_phrase(
                 match_docs = match_docs[~np.isin(match_docs, dele)]
                 if match_docs.size == 0:
                     continue
-            norms = _load_shard_norms(norms_root, int(shard_val), rng, n_docs)
+            dl_of = _load_shard_norms(norms_root, int(shard_val), rng, n_docs)
             acc = {int(d): 0.0 for d in match_docs.tolist()}
             for t in uniq:  # sorted-term summation order == driver engine
                 docs, tfs, _ = decoded[t]
@@ -586,7 +580,7 @@ def search_sharded_phrase(
                     continue
                 d_sel, tf_sel = docs[sel], tfs[sel].astype(np.float64)
                 idf = float(np.log1p((n_eff - dfm[t] + 0.5) / (dfm[t] + 0.5)))
-                dls = norms.arr[d_sel - norms.lo]
+                dls = dl_of(d_sel)
                 scores = idf * (tf_sel / (tf_sel + k1 * (1.0 - b + b * dls / avgdl)))
                 for d, s in zip(d_sel.tolist(), scores.tolist()):
                     acc[d] += s
@@ -785,7 +779,7 @@ def search_sharded_batch(
             return float(np.log1p((n_eff - dfm[t] + 0.5) / (dfm[t] + 0.5)))
 
         for shard_val, grp in pdf_all.groupby("shard", sort=False):
-            norms = _load_shard_norms(norms_root, int(shard_val), rng, n_docs)
+            dl_of = _load_shard_norms(norms_root, int(shard_val), rng, n_docs)
             dele = _shard_tombstones(index_dir, int(shard_val), rng)
             # every scanned term belongs to some query: decode each
             # once and share the arrays across the batch
@@ -801,7 +795,7 @@ def search_sharded_batch(
                 hits = exhaustive_topk_arrays(
                     {t: dec[t] for t in present},
                     idf_of=idf_of,
-                    dl_of=lambda docs: norms.arr[docs - norms.lo],
+                    dl_of=dl_of,
                     avgdl=avgdl,
                     k=k,
                     k1=k1,
@@ -1006,7 +1000,7 @@ def search_sharded_bool(
             return
         dfm = bc_df.value
         for shard_val, grp in pdf_all.groupby("shard", sort=False):
-            norms = _load_shard_norms(norms_root, int(shard_val), rng, n_docs)
+            dl_of = _load_shard_norms(norms_root, int(shard_val), rng, n_docs)
             dele = _shard_tombstones(index_dir, int(shard_val), rng)
             decoded = {}
             for r in grp.itertuples():
@@ -1024,7 +1018,7 @@ def search_sharded_bool(
                     idf_of=lambda t: float(
                         np.log1p((n_eff - dfm[t] + 0.5) / (dfm[t] + 0.5))
                     ),
-                    dl_of=lambda docs: norms.arr[docs - norms.lo],
+                    dl_of=dl_of,
                     avgdl=avgdl,
                     k1=k1,
                     b=b,
@@ -1477,7 +1471,7 @@ def search_sharded(
             return float(np.log1p((n_eff - dfm[t] + 0.5) / (dfm[t] + 0.5)))
 
         for shard_val, grp in pdf_all.groupby("shard", sort=False):
-            norms = _load_shard_norms(norms_root, int(shard_val), rng, n_docs)
+            dl_of = _load_shard_norms(norms_root, int(shard_val), rng, n_docs)
             dele = _shard_tombstones(index_dir, int(shard_val), rng)
             hits = exhaustive_topk_arrays(
                 {
@@ -1485,7 +1479,7 @@ def search_sharded(
                     for r in grp.itertuples()
                 },
                 idf_of=idf_of,
-                dl_of=lambda docs: norms.arr[docs - norms.lo],
+                dl_of=dl_of,
                 avgdl=avgdl,
                 k=k,
                 k1=k1,

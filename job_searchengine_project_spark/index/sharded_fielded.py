@@ -244,7 +244,7 @@ def search_sharded_multi(
                 if rows.empty:
                     continue
                 c = consts[field]
-                norms = _load_shard_norms(
+                dl_of = _load_shard_norms(
                     os.path.join(sub_dirs[field], NORMS_DIR),
                     shard, rng, c["n_docs"],
                 )
@@ -259,7 +259,7 @@ def search_sharded_multi(
                         (consts[f]["n_eff"] - dfm[(f, t)] + 0.5)
                         / (dfm[(f, t)] + 0.5)
                     )),
-                    dl_of=lambda docs, nm=norms: nm.arr[docs - nm.lo],
+                    dl_of=dl_of,
                     avgdl=c["avgdl"],
                     k1=c["k1"],
                     b=c["b"],
@@ -432,10 +432,10 @@ def search_sharded_bool_fielded(
             shard = int(shard_val)
             # decode each (field, term) once; per-field norms/tombstones
             decoded: dict[tuple[str, str], tuple] = {}
-            norms_of: dict[str, object] = {}
+            dl_of_field: dict[str, object] = {}
             for field, fgrp in grp.groupby("field", sort=False):
                 c = consts[field]
-                norms_of[field] = _load_shard_norms(
+                dl_of_field[field] = _load_shard_norms(
                     os.path.join(sub_dirs[field], NORMS_DIR),
                     shard, rng, c["n_docs"],
                 )
@@ -449,13 +449,13 @@ def search_sharded_bool_fielded(
 
             def clause_acc(field, terms):
                 c = consts[field]
-                nm = norms_of.get(field)
+                dl_of = dl_of_field.get(field)
                 arrays = {
                     t: decoded[(field, t)]
                     for t in terms
                     if (field, t) in decoded
                 }
-                if not arrays or nm is None:
+                if not arrays or dl_of is None:
                     return {}
                 uniq, sums = accumulate_arrays(
                     arrays,
@@ -463,7 +463,7 @@ def search_sharded_bool_fielded(
                         (consts[f]["n_eff"] - dfm[(f, t)] + 0.5)
                         / (dfm[(f, t)] + 0.5)
                     )),
-                    dl_of=lambda docs: nm.arr[docs - nm.lo],
+                    dl_of=dl_of,
                     avgdl=c["avgdl"],
                     k1=c["k1"],
                     b=c["b"],

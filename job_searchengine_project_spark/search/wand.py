@@ -23,10 +23,12 @@ levels:
 Exactness: all bounds are true upper bounds computed with the same
 float64 formula as real scores; the threshold comparison keeps a
 1e-9 slack so rounding can never cause a false skip — the engine may
-score a few extra docs, never miss one. Results therefore rank like
-the vectorized kernel (ascending-doc_id tie-break, heap ordering
-(desc score, asc doc_id)); scores agree to 1e-9 but not bitwise,
-because the float operations group differently.
+score a few extra docs, never miss one. Results use the vectorized
+kernel's ordering (desc score, asc doc_id tie-break); scores agree to
+1e-9 but not bitwise, because the float operations group differently.
+So on docs that tie exactly in the vectorized kernel, this kernel's
+order — and a ``search_after`` cursor taken from it — can differ by
+a 1-ulp score difference.
 """
 
 from __future__ import annotations

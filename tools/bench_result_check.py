@@ -1,10 +1,9 @@
 """Check a saved perfbench result line against BENCHMARK.json.
 
 Usage:  python tools/bench_result_check.py FILE --mode {end_to_end,per_layer}
-                [--benchmark PATH]
 
-FILE is the saved stdout of one ``perfbench/run.py`` run (``-`` reads
-stdin); its last non-empty line is the result line. That line is
+FILE is the saved stdout of one ``perfbench/run.py`` run; its last
+non-empty line is the result line. That line is
 parsed strictly: ``NaN``, ``Infinity`` and ``-Infinity`` are rejected,
 as is anything but a JSON object with a ``metrics`` object. Every
 metric that BENCHMARK.json lists under ``--mode`` (``end_to_end`` for
@@ -12,8 +11,8 @@ metric that BENCHMARK.json lists under ``--mode`` (``end_to_end`` for
 present with a finite numeric ``value``.
 
 Prints ``ok: N <mode> metrics`` and exits 0, or names every missing or
-non-finite metric and exits 1. Reads nothing but FILE and
-BENCHMARK.json (default: the one at the repo root).
+non-finite metric and exits 1. Reads nothing but FILE and the
+BENCHMARK.json at the repo root.
 """
 
 from __future__ import annotations
@@ -68,15 +67,11 @@ def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("file")
     ap.add_argument("--mode", required=True, choices=("end_to_end", "per_layer"))
-    ap.add_argument("--benchmark", default=_BENCHMARK)
     args = ap.parse_args(argv)
-    with open(args.benchmark) as f:
+    with open(_BENCHMARK) as f:
         listed = [m["name"] for m in json.load(f)[args.mode]]
-    if args.file == "-":
-        text = sys.stdin.read()
-    else:
-        with open(args.file) as f:
-            text = f.read()
+    with open(args.file) as f:
+        text = f.read()
     try:
         result = result_line(text)
     except ValueError as e:
